@@ -220,7 +220,9 @@ def main() -> None:
     }
     if noise_factor is not None:
         payload["noise_factor"] = noise_factor
-    detail = dict(payload, queries=timings, cpus=int(cpus))
+    # SPARK_GRAFT_CPUS is otherwise an opaque label (history key, file
+    # suffix): a non-numeric value is recorded as given, not a crash here
+    detail = dict(payload, queries=timings, cpus=int(cpus) if cpus.isdigit() else cpus)
     print(f"[bench] detail: {json.dumps(detail, separators=(',', ':'))}", file=sys.stderr)
     # per-core-count detail files (r16 VERDICT #4): the driver's low-core
     # scaling pass must not overwrite the 32-core detail artifact

@@ -129,7 +129,9 @@ def parquet_ts_unit(path: str, col: str) -> str | None:
 # is that catalog — it memoizes the lazy scan DATAFRAME (a plan object;
 # nothing is materialized, no .cache(), every bench invocation still
 # computes from parquet in its own process). Weakly keyed by session so a
-# stopped session's entries are collectable; kill switch for A/B.
+# stopped session's entries are collectable; kill switch for A/B. Each entry
+# carries its file's (mtime, size) signature: a table rewritten within the
+# session is scanned afresh instead of through a stale plan.
 import os as _os
 import weakref as _weakref
 
@@ -152,12 +154,28 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if _os.environ.get("SPARK_GRAFT_TABLE_REGISTRY", "1") != "0":
         reg = _TABLE_REGISTRY.setdefault(spark, {})
         key = (_os.path.abspath(sf_dir), name)
-        df = reg.get(key)
-        if df is None:
-            df = _read_table_uncached(spark, sf_dir, name)
-            reg[key] = df
-        return df
+        sig = _file_signature(f"{sf_dir}/{name}.parquet")
+        hit = reg.get(key)
+        if hit is None or hit[0] != sig:
+            hit = reg[key] = (sig, _read_table_uncached(spark, sf_dir, name))
+        return hit[1]
     return _read_table_uncached(spark, sf_dir, name)
+
+
+def _file_signature(path: str):
+    """(mtime_ns, size) of a table file, or of every file in a table
+    directory; None for a path the local filesystem cannot stat (a remote
+    URI), which then stays memoized for the session."""
+    try:
+        if not _os.path.isdir(path):
+            st = _os.stat(path)
+            return st.st_mtime_ns, st.st_size
+        return tuple(sorted(
+            (e.name, e.stat().st_mtime_ns, e.stat().st_size)
+            for e in _os.scandir(path) if e.is_file()
+        ))
+    except OSError:
+        return None
 
 
 def _read_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

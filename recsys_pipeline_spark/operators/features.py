@@ -76,11 +76,14 @@ def zscore_apply(df: DataFrame, stats: dict[str, tuple[float, float]]) -> DataFr
 
     Applied identically to train, test and the online entity table — the
     reference scales all three with the train stats (s1_feature_engi.py:57-69).
+    One ``select`` for all columns: each scaled column keeps its position, as
+    ``withColumn`` would place it, without one analysis pass per column.
     """
-    out = df
-    for c, (m, s) in stats.items():
-        out = out.withColumn(c, (F.col(c).cast("double") - F.lit(m)) / F.lit(s))
-    return out
+    scaled = {
+        c: ((F.col(c).cast("double") - F.lit(m)) / F.lit(s)).alias(c)
+        for c, (m, s) in stats.items()
+    }
+    return df.select(*[scaled.pop(c, F.col(c)) for c in df.columns], *scaled.values())
 
 
 def star_join(

@@ -98,7 +98,7 @@ def q_rank_score_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = feats.filter(F.col("istest") == 0)
     test = feats.filter(F.col("istest") == 1)
     model = rank_model.train_rank_model(train, cols, algo="fm", factor_size=4, max_iter=10)
-    return rank_model.score(model, test).select("event_id", "userid", "itemid", "score")
+    return rank_model.score(model, test, keep=["event_id", "userid", "itemid"])
 
 
 def q_rank_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,7 +263,7 @@ DET_RANK_WEIGHTS: list[tuple[str, float]] = [
 def q_recommend_top50_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The §2.10 composite's relational skeleton, hash-match checkable: the
     SAME serving path as q_recommend_top50 (P13 defaults -> 0.9/0.1 fused
-    recall -> seen anti-join -> entity joins -> zero-fill -> top-50) but with
+    recall -> seen filter -> entity joins -> zero-fill -> top-50) but with
     deterministic type-count profile vectors instead of ALS factors and a
     fixed-coefficient linear scorer instead of the trained ranker — every step
     closed-form, so the DuckDB oracle reproduces scores bit-for-bit
@@ -273,8 +273,8 @@ def q_recommend_top50_det(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     inter = _interactions(spark, sf_dir).filter(F.col("itemid").isNotNull())
     train, _ = _train_test(inter)
-    # Eight downstream branches (profiles/terms/seen/entity x user/item) hang
-    # off this split; without materialization Catalyst re-executes the
+    # The state and entity branches of both sides hang off this split;
+    # without materialization Catalyst re-executes the
     # scan+window subtree once PER BRANCH (measured 9 FileScans / 14 Windows,
     # ~3x wall). Materialize the split once — the offline pipeline's "write
     # the split table" step, kept in executor memory (cluster: checkpoint to
@@ -327,11 +327,10 @@ def q_recommend_top50_det(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j, t in enumerate(EVENT_TYPES)
         ],
     ).localCheckpoint(eager=False)  # lazy: cached at first use, no barrier
-    user_vecs = user_agg.select("userid", _vec())
-    seen = user_agg.select("userid", "items")
     user_entity = user_agg.select("userid", "u_n", "u_rate")
-    user_terms = user_agg.select(
+    user_state = user_agg.select(
         "userid",
+        _vec(),
         F.array_compact(
             F.array(
                 *[
@@ -340,6 +339,7 @@ def q_recommend_top50_det(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         ).cast("array<int>").alias("terms"),
+        "items",
     )
 
     item_agg = with_tid.groupBy("itemid").agg(
@@ -348,18 +348,14 @@ def q_recommend_top50_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("double").alias("i_n"),
         (F.sum("label").cast("double") / F.count(F.lit(1))).alias("i_rate"),
     ).localCheckpoint(eager=False)
-    item_vecs = item_agg.select("itemid", _vec())
-    item_terms = item_agg.select("itemid", "genre_ids")
+    item_state = item_agg.select("itemid", _vec(), "genre_ids")
     item_entity = item_agg.select("itemid", "i_n", "i_rate")
 
     request_users = inter.select("userid").distinct()
     return recommend_linear(
         request_users,
-        user_vecs,
-        item_vecs,
-        user_terms,
-        item_terms,
-        seen,
+        user_state,
+        item_state,
         user_entity,
         item_entity,
         weights=DET_RANK_WEIGHTS,

@@ -328,14 +328,18 @@ def train_with_early_stop(
     return best_model, best_auc, best_iter
 
 
-def score(model: PipelineModel, df: DataFrame, score_col: str = "score") -> DataFrame:
+def score(
+    model: PipelineModel, df: DataFrame, score_col: str = "score", keep: list[str] | None = None
+) -> DataFrame:
     """M9: distributed batch inference; the positive-class probability is the
-    ranking score (sigmoid output in the reference)."""
+    ranking score (sigmoid output in the reference). The output holds
+    ``keep`` (default: every input column) plus ``score_col``."""
     from pyspark.ml.functions import vector_to_array
 
     scored = model.transform(df)
     prob_to_score = F.element_at(vector_to_array(F.col("probability")), 2).cast("double")
-    keep = [c for c in df.columns if c not in ("features",)]
+    if keep is None:
+        keep = [c for c in df.columns if c not in ("features",)]
     return scored.select(*keep, prob_to_score.alias(score_col))
 
 

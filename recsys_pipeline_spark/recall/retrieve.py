@@ -4,19 +4,22 @@ Reference (online/utils/es_caller.py): one Elasticsearch request runs a term
 query (genre terms, boost 0.1) and a cosine kNN (boost 0.9) with a seen-item
 ``must_not`` filter in both branches, merging into one ranked list of 200.
 
-Spark-first re-expression:
-  * term channel  — arrays_overlap / array_intersect between the user's terms
-    and the item's genre set (an inverted index materializes as an exploded
-    equi-join at scale; for dimension-sized item sets a broadcast filter wins);
-  * vector channel — exact brute-force cosine top-k (the reference's
-    num_candidates = all items makes its ANN exact too); the LSH variant in
-    ``similarity.py`` is the 100 TB path;
-  * anti-join the user's seen items BEFORE top-k (same as ES must_not);
-  * fusion — full-outer join by item with coalesce(score, 0) weighted sum:
-    union-by-key with additive scores (SURVEY §2.6).
+Spark-first re-expression (``fused_recall``), one DataFrame for all the
+requested users at once (the reference loops one request at a time):
+  * complete catalog (the reference's dimension-sized item set, whose
+    num_candidates = all items makes its kNN exact): each user row meets the
+    broadcast item catalog once and every pair is scored in one JVM
+    expression — cosine, term match count, seen filter — before the per-user
+    top-k; no channel joins, no exchange beyond the users' own partitioning;
+  * above ``ann_item_threshold`` items: LSH vector candidates
+    (``vector_scores_ann``) and the term channel as an exploded equi-join
+    (``term_scores``, the distributed inverted-index probe), fused by a
+    full outer join with coalesce(score, 0) — union-by-key with additive
+    scores (SURVEY §2.6) — and the seen items anti-joined BEFORE the top-k,
+    as ES does.
 
-Everything is per-user-batch: one DataFrame computes recall for ALL users at
-once (the reference loops one request at a time).
+``vector_scores`` is the exact all-pairs cosine matrix for offline recall
+(``q_mf_recall_topk``).
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from recsys_pipeline_spark.schemas import RECALL_SIZE, TERM_BOOST, VECTOR_BOOST
+from recsys_pipeline_spark.schemas import EMBEDDING_DIM, RECALL_SIZE, TERM_BOOST, VECTOR_BOOST
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -60,7 +63,6 @@ def vector_scores(
     item_vecs: DataFrame,
     users_filter: DataFrame | None = None,
     max_broadcast_items: int = 100_000,
-    n_items: int | None = None,
 ) -> DataFrame:
     """V4: (userid, itemid, cos_score) for every user×item pair — exact
     brute-force, executed with numpy kernels that are vectorized across pairs
@@ -77,8 +79,7 @@ def vector_scores(
         each pair for one scoring task, so memory per task is two blocks
         regardless of catalog size. The output is still |users|×|items|
         rows; when that product itself is the problem, use
-        ``vector_scores_ann`` (candidate generation) instead — ``fused_recall``
-        switches automatically.
+        ``vector_scores_ann`` (candidate generation) instead.
     """
     import numpy as np
     import pandas as pd
@@ -91,14 +92,7 @@ def vector_scores(
     i = item_vecs.select("itemid", F.col("vector").cast("array<double>").alias("ivec"))
 
     spark = user_vecs.sparkSession
-    # callers that already counted the catalog (fused_recall's strategy
-    # switch) pass n_items down — one scalar job instead of two. n_items
-    # MUST be the exact count of item_vecs rows: a stale small value would
-    # route an oversized catalog into the toPandas broadcast branch below
-    # (driver OOM risk); when in doubt pass None and pay the count.
-    if n_items is None:
-        n_items = i.count()
-    if n_items > max_broadcast_items:
+    if i.count() > max_broadcast_items:
         out = _blocked_vector_scores(u, i, max_block_rows=8192)
     else:
         pdf_i = i.toPandas()
@@ -261,60 +255,122 @@ def vector_scores_ann(
     return cand.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
 
 
+def _norm_sql(v: str, dim: int) -> str:
+    """L2 norm of a double-array column as one SQL string: the unrolled
+    left-associated fold of ``dedup._seq_norm``, NULL for a NULL vector; a
+    vector of another dimension fails the query instead of being read
+    truncated."""
+    sq = "+".join(f"element_at({v},{i})*element_at({v},{i})" for i in range(1, dim + 1))
+    return (
+        f"CASE WHEN {v} IS NULL THEN NULL WHEN size({v}) = {dim} THEN SQRT({sq}) "
+        f"ELSE raise_error(concat('{v} has ', size({v}), ' dims, want {dim}')) END"
+    )
+
+
+def _catalog_pairs(
+    users: DataFrame, catalog: DataFrame, dim: int, vector_boost: float, term_boost: float
+) -> DataFrame:
+    """(userid, itemid, recall_score) for every kept pair, scored in the JVM
+    against the broadcast catalog: no exchange of its own, so the pairs keep
+    the users' partitioning.
+
+    * cosine: the unrolled left-associated dot over the two precomputed
+      norms, bit-identical to ``dedup._seq_cross_dot`` / ``_seq_norm`` (the
+      ``similarity.unrolled_dot`` form, one ``F.expr``); NULL on a zero norm;
+    * term: the multiset match count ``term_scores`` computes (one per equal
+      non-NULL element pair), 0 when the sets do not overlap;
+    * kept iff both vectors exist or the term sets overlap, and the item is
+      not among the user's seen items (ES ``must_not``).
+    """
+    u = users.selectExpr(
+        "userid", "CAST(vector AS ARRAY<DOUBLE>) AS uvec", "terms", "items"
+    ).selectExpr("*", f"{_norm_sql('uvec', dim)} AS unorm")
+    i = catalog.selectExpr(
+        "itemid", "CAST(vector AS ARRAY<DOUBLE>) AS ivec", "genre_ids"
+    ).selectExpr("*", f"{_norm_sql('ivec', dim)} AS inorm")
+    dot = "+".join(f"element_at(uvec,{d})*element_at(ivec,{d})" for d in range(1, dim + 1))
+    term = (
+        "CASE WHEN arrays_overlap(terms, genre_ids) THEN aggregate(terms, 0, "
+        "(n, t) -> n + size(filter(genre_ids, g -> g = t))) ELSE 0 END"
+    )
+    score = (
+        f"{float(vector_boost)!r}D * coalesce(try_divide({dot}, unorm * inorm), 0.0D)"
+        f" + {float(term_boost)!r}D * CAST({term} AS DOUBLE)"
+    )
+    # arrays_overlap is true exactly when the match count is positive
+    keep = (
+        "(uvec IS NOT NULL AND ivec IS NOT NULL OR arrays_overlap(terms, genre_ids))"
+        " AND NOT coalesce(array_contains(items, itemid), false)"
+    )
+    return (
+        u.crossJoin(F.broadcast(i))
+        .where(keep)
+        .selectExpr("userid", "itemid", f"{score} AS recall_score")
+    )
+
+
+def _ann_pairs(
+    users: DataFrame, catalog: DataFrame, k: int, vector_boost: float, term_boost: float
+) -> DataFrame:
+    """The above-threshold channels: LSH vector candidates and the term
+    equi-join, fused by a full outer join, seen items anti-joined."""
+    vec = vector_scores_ann(
+        users.where(F.col("vector").isNotNull()).select("userid", "vector"),
+        catalog.where(F.col("vector").isNotNull()).select("itemid", "vector"),
+        k=max(k * 4, k),
+    )
+    term = term_scores(users.select("userid", "terms"), catalog.select("itemid", "genre_ids"))
+    fused = vec.join(term, ["userid", "itemid"], "full_outer").select(
+        "userid",
+        "itemid",
+        (
+            F.lit(vector_boost) * F.coalesce(F.col("cos_score"), F.lit(0.0))
+            + F.lit(term_boost) * F.coalesce(F.col("term_score"), F.lit(0.0))
+        ).alias("recall_score"),
+    )
+    seen_pairs = users.select("userid", F.explode("items").alias("itemid"))
+    return fused.join(seen_pairs, ["userid", "itemid"], "left_anti")
+
+
 def fused_recall(
-    user_vecs: DataFrame,
-    item_vecs: DataFrame,
-    user_terms: DataFrame,
-    item_terms: DataFrame,
-    seen: DataFrame,
+    users: DataFrame,
+    catalog: DataFrame,
     k: int = RECALL_SIZE,
     vector_boost: float = VECTOR_BOOST,
     term_boost: float = TERM_BOOST,
     ann_item_threshold: int = 100_000,
+    n_items: int | None = None,
+    dim: int = EMBEDDING_DIM,
 ) -> DataFrame:
     """The composite recall query (§2.10 lines 1-3): fuse both channels,
-    drop seen items, keep top-k per user by fused score.
+    drop seen items, keep top-k per user by fused score ->
+    (userid, itemid, recall_score).
 
-    The vector channel switches physical strategy on catalog size: at or
-    below ``ann_item_threshold`` items (the reference's 3,952-item dimension
-    case) the exact all-pairs kernel runs; above it, LSH candidate generation
-    (``vector_scores_ann``) keeps per-user candidates bounded so the
-    |users|×|items| matrix is never materialized. Per-user top-k by fused
-    score is unchanged; items outside the candidate set simply contribute
-    cos 0 — the same truncation the reference's ES kNN applies.
+    ``users`` holds one row per user (userid, vector, terms, items) and
+    ``catalog`` one row per item (itemid, vector, genre_ids): the synced
+    state rows (``sync.build_user_state`` / ``build_item_state``). A NULL
+    field is an absent channel: no vector, no terms, nothing seen.
+
+    Strategy by catalog size (``n_items``, the catalog's row count; counted
+    here when the caller has not recorded it):
+      * at or below ``ann_item_threshold`` (the reference's 3,952-item
+        dimension case) the catalog is complete: each user row meets the
+        broadcast catalog once, every pair is scored in one JVM expression
+        (``_catalog_pairs``) and the top-k window runs on the users'
+        partitioning — hash-partition ``users`` on userid and the recall
+        adds no exchange;
+      * above it, LSH candidate generation (``vector_scores_ann``) keeps
+        per-user candidates bounded so the |users|×|items| matrix is never
+        materialized; items outside the candidate set contribute cos 0 — the
+        same truncation the reference's ES kNN applies.
     """
-    n_items = item_vecs.count()
-    complete = n_items <= ann_item_threshold
-    if complete:
-        vec = vector_scores(user_vecs, item_vecs, n_items=n_items)
+    if n_items is None:
+        n_items = catalog.count()
+    if n_items <= ann_item_threshold:
+        pairs = _catalog_pairs(users, catalog, dim, vector_boost, term_boost)
     else:
-        vec = vector_scores_ann(user_vecs, item_vecs, k=max(k * 4, k))
-    term = term_scores(user_terms, item_terms)
-    # Channel fusion stays a full outer join: on the complete-matrix branch
-    # it decomposes exactly into a (broadcastable) left join plus the term
-    # rows outside the vector catalog/request set, but that variant measured
-    # 1.26x SLOWER at sf0.1 (tools/ab_fusedrecall.py, value-identical) — the
-    # removed 150k-row sort is cheaper than the added pin/broadcast/union
-    # stages. See OPTIMIZATION_r16.md.
-    fused = (
-        vec.join(term, ["userid", "itemid"], "full_outer")
-        .select(
-            "userid",
-            "itemid",
-            (
-                F.lit(vector_boost) * F.coalesce(F.col("cos_score"), F.lit(0.0))
-                + F.lit(term_boost) * F.coalesce(F.col("term_score"), F.lit(0.0))
-            ).alias("recall_score"),
-        )
-    )
-    # J6: seen-item anti-join (ES must_not), BEFORE the top-k like ES does
-    seen_pairs = seen.select("userid", F.explode("items").alias("itemid"))
-    fused = fused.join(seen_pairs, ["userid", "itemid"], "left_anti")
-    w = Window.partitionBy("userid").orderBy(
-        F.col("recall_score").desc(), F.col("itemid").asc()
-    )
-    return (
-        fused.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .drop("rk")
-    )
+        pairs = _ann_pairs(users, catalog, k, vector_boost, term_boost)
+    return pairs.withColumn(
+        "rk",
+        F.expr("row_number() OVER (PARTITION BY userid ORDER BY recall_score DESC, itemid)"),
+    ).where(F.col("rk") <= k).drop("rk")

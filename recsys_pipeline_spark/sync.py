@@ -12,8 +12,8 @@ Spark-first, all four sinks are the SAME thing: a parquet table with
 Array-typed columns (no string-encoding round-trip, no pickle), plus
 MLlib-native model persistence. The online point-reads (S10 Redis hget, S11
 Feast get-online-features) then become broadcast lookup joins against these
-tables — serve.recommend consumes them unchanged. On a cluster ``out_dir``
-is any shared filesystem URI (parquet and MLlib writers are both
+tables, whose rows are exactly the shapes the recall reads. On a cluster
+``out_dir`` is any shared filesystem URI (parquet and MLlib writers are both
 path-agnostic); executors never see local driver paths.
 """
 
@@ -25,6 +25,8 @@ from pyspark.ml import PipelineModel
 from pyspark.ml.recommendation import ALSModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from recsys_pipeline_spark.schemas import EMBEDDING_DIM
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -121,7 +123,9 @@ def save_online_state(
 
 def load_online_state(spark: SparkSession, out_dir: str) -> dict:
     """Reload everything save_online_state wrote. Returns a dict with the
-    state/entity DataFrames, models (if present) and feat_meta."""
+    state/entity DataFrames, models (if present), feat_meta, and
+    ``n_items``: the item state's row count, recorded once here so a request
+    never counts the catalog."""
     out: dict = {
         "user_state": spark.read.parquet(f"{out_dir}/user_state"),
         "item_state": spark.read.parquet(f"{out_dir}/item_state"),
@@ -131,6 +135,7 @@ def load_online_state(spark: SparkSession, out_dir: str) -> dict:
         "rank_model": None,
         "feat_meta": None,
     }
+    out["n_items"] = out["item_state"].count()
     if _fs_exists(spark, f"{out_dir}/mf_model"):
         out["mf_model"] = ALSModel.load(f"{out_dir}/mf_model")
     if _fs_exists(spark, f"{out_dir}/rank_model"):
@@ -141,25 +146,24 @@ def load_online_state(spark: SparkSession, out_dir: str) -> dict:
 
 
 def recommend_with_state(
-    st: dict, request_users: DataFrame, feature_cols: list[str], **kwargs
+    st: dict,
+    request_users: DataFrame,
+    feature_cols: list[str],
+    emb_dim: int = EMBEDDING_DIM,
+    **kwargs,
 ) -> DataFrame:
-    """§2.10 served from an already-loaded state dict. Splitting the state
-    tables back into per-channel views is projection, not recomputation."""
-    from recsys_pipeline_spark.serve import recommend
+    """§2.10 served from an already-loaded state dict. The state rows are
+    the recall's input shapes: the request joins the user state once and
+    the item state is the catalog. ``feature_cols`` is the ranker's slot
+    layout, which the synced model already carries. ``kwargs``: recall_k,
+    response_k."""
+    from recsys_pipeline_spark import serve
 
-    us, its = st["user_state"], st["item_state"]
-    return recommend(
-        request_users,
-        us.select("userid", "vector").where(F.col("vector").isNotNull()),
-        its.select("itemid", "vector").where(F.col("vector").isNotNull()),
-        us.select("userid", "terms").where(F.col("terms").isNotNull()),
-        its.select("itemid", "genre_ids").where(F.col("genre_ids").isNotNull()),
-        us.select("userid", "items").where(F.col("items").isNotNull()),
-        st["user_entity"],
-        st["item_entity"],
-        st["rank_model"],
-        feature_cols,
-        **kwargs,
+    return serve.rank_candidates(
+        serve.user_rows(request_users, [st["user_state"]], emb_dim),
+        st["item_state"], st["user_entity"], st["item_entity"],
+        serve.model_score(st["rank_model"]),
+        emb_dim=emb_dim, n_items=st.get("n_items"), **kwargs,
     )
 
 

@@ -93,6 +93,23 @@ def test_parquet_ts_unit_probe_and_plain_int64_guard(spark, tmp_path):
         _ts_stored_as_int64(str(int_dir))
 
 
+def test_table_registry_rescans_a_rewritten_table(spark, tmp_path):
+    """The session's scan registry hands back the memoized scan while the
+    table file is unchanged, and scans afresh once it is rewritten (its
+    mtime/size signature moved) instead of serving the stale plan."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "part.parquet")
+    pq.write_table(pa.table({"p_partkey": [1]}), path)
+    first = eio.read_table(spark, str(tmp_path), "part")
+    assert eio.read_table(spark, str(tmp_path), "part") is first
+    pq.write_table(pa.table({"p_partkey": [1, 2, 3]}), path)
+    again = eio.read_table(spark, str(tmp_path), "part")
+    assert again is not first
+    assert sorted(r[0] for r in again.collect()) == [1, 2, 3]
+
+
 def test_jsonl_round_trip_and_corrupt_record_quarantine(spark, tmp_path):
     """JSONL scan with explicit schema: good lines parse, malformed lines
     land whole in the corrupt column with fields NULL (PERMISSIVE — the one

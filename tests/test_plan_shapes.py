@@ -464,3 +464,59 @@ def test_segment_quantiles_window_consumes_histogram(spark):
     for w in re.findall(r"Window .*", plan):
         assert "segment" in w, w
     assert "CartesianProduct" not in plan
+
+
+def test_served_request_shuffles_once(spark, tmp_path):
+    """A request served from synced state (complete catalog) is one hash
+    exchange — the request rows on userid — under the recall window, the
+    entity joins, the ranker and the top-50 window: no sort-merge join, no
+    Python scoring, and one nested-loop join whose broadcast side is the
+    item catalog."""
+    from recsys_pipeline_spark import sync
+    from recsys_pipeline_spark.rank import model as rank_model
+
+    user_state = spark.createDataFrame(
+        [(u, [float(u % 3), 1.0, 0.5], [u % 4], [u % 5]) for u in range(40)],
+        "userid long, vector array<float>, terms array<int>, items array<bigint>",
+    )
+    item_state = spark.createDataFrame(
+        [(i, [1.0, float(i % 7), -0.5], [i % 4]) for i in range(30)],
+        "itemid long, vector array<float>, genre_ids array<int>",
+    )
+    user_entity = spark.createDataFrame(
+        [(u, float(u % 2)) for u in range(40)], "userid long, u_x double"
+    )
+    item_entity = spark.createDataFrame(
+        [(i, float(i % 3)) for i in range(30)], "itemid long, i_x double"
+    )
+    train = spark.createDataFrame(
+        [(float(n % 2), float(n % 3), n % 2) for n in range(40)],
+        "u_x double, i_x double, label int",
+    )
+    ranker = rank_model.train_rank_model(train, ["u_x", "i_x"], algo="lr", max_iter=5)
+    out = str(tmp_path / "state")
+    sync.save_online_state(out, user_state, item_state, user_entity, item_entity, ranker=ranker)
+    st = sync.load_online_state(spark, out)
+
+    req = spark.createDataFrame([(1,), (2,), (99,)], "userid long")
+    df = sync.recommend_with_state(st, req, ["u_x", "i_x"], emb_dim=3, recall_k=10, response_k=5)
+    assert df.count() == 15
+    df.collect()  # the plan of this query, settled by AQE
+    plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "SortMergeJoin" not in plan
+    assert "MapInPandas" not in plan
+    assert plan.count("BroadcastNestedLoopJoin") == 1
+    assert "BroadcastNestedLoopJoin BuildRight" in plan
+    lines = plan.splitlines()
+    top = next(n for n, line in enumerate(lines) if "IdentityBroadcastMode" in line)
+    col = lines[top].index("+-")
+    catalog_side = []
+    for line in lines[top + 1:]:
+        if line.find("+-") <= col:
+            break
+        catalog_side.append(line)
+    # scan paths are abbreviated in plan strings: recognise the item state
+    # by its read schema
+    assert any("FileScan" in line and "genre_ids" in line for line in catalog_side)
+    assert not any("userid" in line for line in catalog_side)

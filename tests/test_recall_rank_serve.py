@@ -124,13 +124,16 @@ def test_vector_scores_ann_recall_vs_exact(spark):
 def test_fused_recall_ann_switch(world, mf_model):
     """Forcing the ANN switch (threshold 0) must still produce <= k ranked,
     seen-filtered rows per user — same contract as the exact path."""
+    from recsys_pipeline_spark import sync
+
     offline, movies = world["offline"], world["movies"]
     ut = terms.recall_terms(terms.user_term(offline, movies), min_clicks=2)
     item_t = terms.item_term(movies)
     seen = terms.user_filter(offline)
     out = retrieve.fused_recall(
-        vectors.user_vectors(mf_model), vectors.item_vectors(mf_model),
-        ut, item_t, seen, k=10, ann_item_threshold=0,
+        sync.build_user_state(vectors.user_vectors(mf_model), ut, seen),
+        sync.build_item_state(vectors.item_vectors(mf_model), item_t),
+        k=10, ann_item_threshold=0,
     )
     rows = out.collect()
     assert rows
@@ -141,6 +144,106 @@ def test_fused_recall_ann_switch(world, mf_model):
     for uid, rs in by_user.items():
         assert len(rs) <= 10
         assert all(r["itemid"] not in seen_map.get(uid, set()) for r in rs)
+
+
+# Adversarial recall world (dim 3): tied cosines, duplicate terms and
+# genres, NULL elements, items with genres but no vector and the reverse,
+# zero-norm vectors on both sides, duplicate seen entries, absent channels.
+_ADV_ITEMS = [
+    (1, [1.0, 0.0, 0.0], [1, 2]),
+    (2, [1.0, 0.0, 0.0], [2, 2]),
+    (3, None, [3]),
+    (4, [0.0, 0.0, 0.0], None),
+    (5, [0.5, 0.25, -1.0], []),
+    (6, [1.0, 0.0, 0.0], [1]),
+    (7, None, None),
+    (8, [-1.0, 0.1, 0.3], [1, None]),
+    (9, [1e-3, 2.0, 3.0], [2]),
+    (10, [0.7, 0.7, 0.0], [3, 3]),
+]
+_ADV_USERS = [
+    (10, [1.0, 0.0, 0.0], [2, 2, 1], [1, 1, 6]),
+    (11, None, [3], None),
+    (12, [0.0, 0.0, 0.0], None, None),
+    (13, [0.3, -0.2, 0.9], [1, None], [None, 5]),
+    (14, None, None, None),
+    (15, [2.0, 0.0, 0.0], [3], [4, 4]),
+]
+
+
+def _reference_recall(users, items, k, vector_boost=0.9, term_boost=0.1):
+    """fused_recall's complete-catalog contract in plain Python: cosine as
+    the left-to-right fold (None on a zero norm), the multiset term match
+    count, kept iff both vectors exist or a term matches and the item is
+    unseen; top k by (score desc, itemid asc)."""
+    import math
+
+    def fold(a, b):
+        acc = a[0] * b[0]
+        for x, y in zip(a[1:], b[1:]):
+            acc = acc + x * y
+        return acc
+
+    out = []
+    for uid, uvec, uterms, seen in users:
+        seen_ids = {s for s in seen or [] if s is not None}
+        rows = []
+        for iid, ivec, genres in items:
+            term = sum(1 for t in uterms or [] if t is not None for g in genres or [] if g == t)
+            both = uvec is not None and ivec is not None
+            if iid in seen_ids or not (both or term > 0):
+                continue
+            cos = None
+            if both:
+                den = math.sqrt(fold(uvec, uvec)) * math.sqrt(fold(ivec, ivec))
+                cos = fold(uvec, ivec) / den if den != 0 else None
+            score = vector_boost * (0.0 if cos is None else cos) + term_boost * float(term)
+            rows.append((uid, iid, score))
+        rows.sort(key=lambda r: (-r[2], r[1]))
+        out += rows[:k]
+    return sorted(out)
+
+
+def test_fused_recall_matches_python_reference(spark):
+    """The complete-catalog recall (one JVM expression per user×item pair
+    against the broadcast catalog) must equal the plain-Python contract
+    exactly — every score to the last bit, ties broken by itemid — and,
+    through ``serve.user_rows``, give an unknown user the P13 defaults."""
+    users = spark.createDataFrame(
+        _ADV_USERS, "userid long, vector array<double>, terms array<int>, items array<bigint>"
+    )
+    catalog = spark.createDataFrame(
+        _ADV_ITEMS, "itemid long, vector array<double>, genre_ids array<int>"
+    )
+    for k in (3, 20):
+        got = sorted(
+            (r["userid"], r["itemid"], r["recall_score"])
+            for r in retrieve.fused_recall(users, catalog, k=k, dim=3).collect()
+        )
+        assert got == _reference_recall(_ADV_USERS, _ADV_ITEMS, k)
+
+    req = spark.createDataFrame([(10,), (14,), (99,)], "userid long")
+    rows = serve.user_rows(req, [users], emb_dim=3)
+    got = sorted(
+        (r["userid"], r["itemid"], r["recall_score"])
+        for r in retrieve.fused_recall(rows, catalog, k=4, n_items=len(_ADV_ITEMS), dim=3)
+        .collect()
+    )
+    want_users = [u for u in _ADV_USERS if u[0] == 10] + [
+        (14, [1.0] * 3, None, None), (99, [1.0] * 3, None, None)
+    ]
+    assert got == _reference_recall(want_users, _ADV_ITEMS, 4)
+
+
+def test_fused_recall_rejects_a_vector_of_another_dimension(spark):
+    users = spark.createDataFrame(
+        _ADV_USERS, "userid long, vector array<double>, terms array<int>, items array<bigint>"
+    )
+    catalog = spark.createDataFrame(
+        [(1, [1.0, 0.0], [1])], "itemid long, vector array<double>, genre_ids array<int>"
+    )
+    with pytest.raises(Exception, match="ivec has 2 dims, want 3"):
+        retrieve.fused_recall(users, catalog, k=3, dim=3).collect()
 
 
 def test_term_recall_hit_count_consistency(world):

@@ -64,7 +64,10 @@ def main() -> None:
         " the final plan (checkpoint-materialized passes not included),"
         " `bhj`/`smj` = broadcast vs sort-merge joins, `py` = Arrow Python"
         " boundaries, `cart` = cartesian/nested-loop joins (should be 0"
-        " everywhere except documented broadcast-1-row frames)."
+        " everywhere except documented broadcast-1-row frames and the"
+        " complete-catalog recall of the recommend queries, where each"
+        " requested user row meets the broadcast item catalog once — above"
+        " `ann_item_threshold` items the LSH equi-join takes over)."
     )
     print()
     print("| query | exch | scan | bhj | smj | py | cart |")
