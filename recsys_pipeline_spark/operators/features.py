@@ -8,10 +8,10 @@ constant-column pruning, and the fixed 59-slot feature layout.
 Spark design notes:
   * encodings are map-literal / array_contains expressions — pure codegen, no
     UDF, no fitted state except where stats are genuinely data-dependent;
-  * train stats (mean/stddev_samp) are ONE tiny aggregate row, attached via a
-    literal/broadcast cross join — never a per-row lookup;
-  * constant-column pruning (P6) is data-dependent so it cannot be a Catalyst
-    rewrite: a single countDistinct pass decides the select list;
+  * the data-dependent statistics — constant-column pruning (P6, it cannot be
+    a Catalyst rewrite), cardinalities (A9) and train mean/stddev_samp (A3) —
+    are ONE ordinary aggregate row (``feature_stats``), and the z-score
+    applies them as double literals — never a per-row lookup;
   * star joins (J3) broadcast the dimension side.
 """
 
@@ -38,37 +38,46 @@ def multi_hot_flags(
     return df.select(*cols)
 
 
-def constant_columns(df: DataFrame, candidate_cols: list[str]) -> list[str]:
-    """P6: names of candidate columns with exactly one distinct value.
+def feature_stats(
+    df: DataFrame,
+    constant_candidates: list[str],
+    card_cols: list[str],
+    dense_cols: list[str],
+    train_pred: str,
+) -> tuple[list[str], dict[str, int], dict[str, tuple[float, float]]]:
+    """P6 + A9 + A3 as ONE aggregate job over ``df`` ->
+    (constant columns, cardinalities, train z-score stats).
 
-    One aggregate job over all candidates at once (approx_count_distinct would
-    be cheaper at 100 TB but can under/over-count 1 vs 2; countDistinct on
-    already-encoded small-int columns is a cheap partial agg).
+    * P6: a candidate is constant when ``min == max`` or it is all-NULL —
+      the same test as ``countDistinct <= 1`` (which ignores NULLs), as a
+      cheap partial aggregate;
+    * A9: cardinality = max + 1 (s1_feature_engi.py:76,80); an all-NULL
+      column (possible after a left star-join with no dim match) has
+      cardinality 0 instead of a driver-side TypeError;
+    * A3: per dense column (mean, sample stddev) over the rows matching the
+      SQL predicate ``train_pred`` only, with the reference's guards — NaN
+      mean -> 0.0, NaN/<=0 stddev -> 1.0 (s1_feature_engi.py:62-64).
     """
-    row = df.agg(*[F.countDistinct(F.col(c)).alias(c) for c in candidate_cols]).collect()[0]
-    return [c for c in candidate_cols if row[c] <= 1]
-
-
-def drop_constant_columns(df: DataFrame, candidate_cols: list[str]) -> tuple[DataFrame, list[str]]:
-    dropped = constant_columns(df, candidate_cols)
-    return df.drop(*dropped), dropped
-
-
-def train_stats(train_df: DataFrame, dense_cols: list[str]) -> dict[str, tuple[float, float]]:
-    """A3: per-column (mean, sample stddev) with the reference's guards —
-    NaN mean→0.0, NaN/<=0 stddev→1.0 (s1_feature_engi.py:62-64). One job."""
-    aggs = []
+    maxed = list(dict.fromkeys([*constant_candidates, *card_cols]))
+    exprs = [f"max(`{c}`) AS `{c}__max`" for c in maxed]
+    exprs += [f"min(`{c}`) AS `{c}__min`" for c in constant_candidates]
     for c in dense_cols:
-        aggs.append(F.avg(F.col(c)).alias(f"{c}__mean"))
-        aggs.append(F.stddev_samp(F.col(c)).alias(f"{c}__std"))
-    row = train_df.agg(*aggs).collect()[0]
-    out: dict[str, tuple[float, float]] = {}
+        x = f"CASE WHEN {train_pred} THEN `{c}` END"
+        exprs += [f"avg({x}) AS `{c}__mean`", f"stddev_samp({x}) AS `{c}__std`"]
+    row = df.selectExpr(*exprs).first()
+
+    constant = [
+        c for c in constant_candidates
+        if row[f"{c}__max"] is None or row[f"{c}__min"] == row[f"{c}__max"]
+    ]
+    cards = {c: (-1 if row[f"{c}__max"] is None else int(row[f"{c}__max"])) + 1 for c in card_cols}
+    stats: dict[str, tuple[float, float]] = {}
     for c in dense_cols:
         m, s = row[f"{c}__mean"], row[f"{c}__std"]
         m = 0.0 if m is None else float(m)
         s = 1.0 if (s is None or s != s or s <= 0) else float(s)
-        out[c] = (m, s)
-    return out
+        stats[c] = (m, s)
+    return constant, cards, stats
 
 
 def zscore_apply(df: DataFrame, stats: dict[str, tuple[float, float]]) -> DataFrame:
@@ -76,14 +85,16 @@ def zscore_apply(df: DataFrame, stats: dict[str, tuple[float, float]]) -> DataFr
 
     Applied identically to train, test and the online entity table — the
     reference scales all three with the train stats (s1_feature_engi.py:57-69).
-    One ``select`` for all columns: each scaled column keeps its position, as
-    ``withColumn`` would place it, without one analysis pass per column.
+    One ``selectExpr`` for all columns: each scaled column keeps its position,
+    as ``withColumn`` would place it, without one analysis pass per column.
+    ``repr`` gives the shortest string that reads back as the same double, so
+    the ``D`` literals are the exact stats.
     """
     scaled = {
-        c: ((F.col(c).cast("double") - F.lit(m)) / F.lit(s)).alias(c)
+        c: f"(CAST(`{c}` AS DOUBLE) - {m!r}D) / {s!r}D AS `{c}`"
         for c, (m, s) in stats.items()
     }
-    return df.select(*[scaled.pop(c, F.col(c)) for c in df.columns], *scaled.values())
+    return df.selectExpr(*[scaled.pop(c, f"`{c}`") for c in df.columns], *scaled.values())
 
 
 def star_join(
@@ -99,15 +110,3 @@ def star_join(
     for dim, key in dims:
         out = out.join(F.broadcast(dim), key, how)
     return out
-
-
-def max_plus_one(df: DataFrame, cols: list[str]) -> dict[str, int]:
-    """A9: per-sparse-feature cardinality = max+1 (s1_feature_engi.py:76,80).
-
-    An all-NULL column (possible after a left star-join with no dim match)
-    makes F.max NULL; coalesce to -1 so its cardinality is 0 instead of a
-    driver-side TypeError."""
-    row = df.agg(
-        *[F.coalesce(F.max(F.col(c)), F.lit(-1)).alias(c) for c in cols]
-    ).collect()[0]
-    return {c: int(row[c]) + 1 for c in cols}

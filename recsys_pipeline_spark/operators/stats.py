@@ -293,7 +293,7 @@ def ranked_score_groups(
     ranking stage of rank_sum_auc, exposed so its plan shape (broadcast
     offset join, pid-partitioned prefix window, no global sort) is
     pinnable by tests. _before = exact number of rows with a strictly
-    smaller score, via the assign_queryid two-pass (pit.py:141)."""
+    smaller score, via the assign_queryid two-pass (pit.py)."""
     from pyspark.sql import Window
 
     spark = df.sparkSession
@@ -307,10 +307,11 @@ def ranked_score_groups(
     part = g.repartitionByRange(n_partitions, F.col(score_col).asc())
     # Freeze the pid-stamped frame ONCE: the offsets job and the ranking
     # job must see the SAME range bounds, but RangePartitioner re-samples
-    # per job and its parent here is an AQE-coalesced shuffle whose layout
-    # can differ between jobs (measured: three different AUC values on
-    # three uncached runs). assign_queryid gets away without this because
-    # its parent is a stable file scan; a shuffled parent needs the pin.
+    # per job (its seed includes the RDD id) and its parent here is an
+    # AQE-coalesced shuffle whose layout can differ between jobs (measured:
+    # three different AUC values on three uncached runs). Any two-pass
+    # over a partial range sample needs this pin; assign_queryid pins the
+    # same way.
     with_pid = part.select(
         part["*"], F.spark_partition_id().alias("_pid")
     ).localCheckpoint(eager=True)
@@ -350,7 +351,7 @@ def rank_sum_auc(
     DuckDB HUGEINT evaluation (the metric PATH of M8 is pure relational
     algebra even though the model FIT is not — r13 verdict item 6).
 
-    Scale shape (the assign_queryid two-pass, pit.py:141): (1) one hash
+    Scale shape (the assign_queryid two-pass, pit.py): (1) one hash
     shuffle aggregates (cnt, pos) per distinct score; (2) scores are
     range-partitioned ascending, rows_before = per-partition running count
     + a driver-collected offset vector of n_partitions scalars (never

@@ -12,8 +12,10 @@ Scale notes (100 TB):
     (partitionBy, orderBy) specs (CollapseWindow), so asking for five ranking
     functions costs the same shuffle as asking for one;
   * no global windows: everything here is keyed.  Global ordering at scale
-    lives in `pit.assign_queryid` (two-pass range partition) — do not add a
-    `Window.orderBy` with no partitionBy to this module;
+    lives in `pit.assign_queryid` (two-pass range partition over a pinned
+    frame: range bounds are re-sampled per job, so both passes must read one
+    checkpoint) — do not add a `Window.orderBy` with no partitionBy to this
+    module;
   * RANGE frames sort within partitions exactly like ROWS frames — the frame
     evaluation is an incremental add/evict scan in WindowExec, not a
     recompute-per-row.

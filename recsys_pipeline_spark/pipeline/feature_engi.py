@@ -9,11 +9,14 @@ Reference: offline/rank/s1_feature_engi.py. Slot layout (parse_feat_meta.py:4-26
 All encodings are JVM-side expressions (no UDFs); z-score stats come from the
 TRAIN partition only and are applied to train, test and the user entity table
 alike (s1_feature_engi.py:57-69), with the reference's NaN/<=0 guards.
+
+The impression PIT frame is computed once and pinned (with its queryid) by
+``terms.imp_term``; every job of this stage that needs it reads the pinned
+rows instead of re-running the window. The user entity table is a different
+frame (the last-11 state) and is computed on its own.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,36 +60,41 @@ def build_features(
     """The full stage: PIT features + star joins + scaling + layout.
 
     Returns (train_df, test_df, user_entity, item_entity, feat_meta_dict).
-    The fact table shuffles ONCE (on userid, for the PIT window); both
-    dimension joins broadcast; the scaling stats are a single tiny aggregate.
+    The PIT frame is computed ONCE: ``imp_term`` pins it with its queryid
+    (``pit.assign_queryid``), and the statistics job and the train/test
+    frames all read the pinned rows — no later job re-runs the window or
+    its userid exchange. Both dimension joins broadcast. Constant-column
+    pruning, cardinalities and the train z-score stats come from one
+    ordinary aggregate (``features.feature_stats``). Construction runs three
+    actions: the pin, its per-partition counts and that aggregate.
     """
-    pit_df = terms_mod.imp_term(offline_imp, movies)  # adds user_g*, queryid
+    pit_df = terms_mod.imp_term(offline_imp, movies)  # pinned: user_g*, queryid
     user_dim = encode_users(users)
     item_dim = encode_items(movies)
 
     joined = feat.star_join(pit_df, [(user_dim, "userid"), (item_dim, "itemid")])
 
-    # P6: data-dependent constant-column prune over generated sparse features
-    pruned: list[str] = []
-    if prune_constants:
-        candidates = ["gender", "age", "occupation"] + [f"item_g{v}" for v in GENRE_IDS]
-        joined, pruned = feat.drop_constant_columns(joined, candidates)
+    # P6 (data-dependent constant-column prune over the generated sparse
+    # features), A9 cardinalities and P10's TRAIN-only stats, in one job
+    user_side = ["gender", "age", "occupation"]
+    constant, cards, stats = feat.feature_stats(
+        joined,
+        constant_candidates=SPARSE_SIDE_COLS,
+        card_cols=SPARSE_ID_COLS + user_side,
+        dense_cols=DENSE_COLS,
+        train_pred="istest = 0",
+    )
+    pruned = constant if prune_constants else []
+    joined = joined.drop(*pruned)
 
     sparse_side = [c for c in SPARSE_SIDE_COLS if c not in pruned]
     dense = list(DENSE_COLS)
     all_cols = SPARSE_ID_COLS + sparse_side + dense
 
-    train = joined.filter(F.col("istest") == 0)
-    test = joined.filter(F.col("istest") == 1)
-
-    # P10: z-score dense cols from TRAIN stats only (stddev_samp + guards)
-    stats = feat.train_stats(train, dense)
-    train = feat.zscore_apply(train, stats)
-    test = feat.zscore_apply(test, stats)
-
+    # P10: z-score dense cols with the TRAIN stats (stddev_samp + guards)
     select_cols = ["queryid", "label"] + all_cols
-    train_df = train.select(*select_cols)
-    test_df = test.select(*select_cols)
+    train_df = feat.zscore_apply(joined.filter("istest = 0"), stats).select(*select_cols)
+    test_df = feat.zscore_apply(joined.filter("istest = 1"), stats).select(*select_cols)
 
     # Entity tables for the online path (user state = last-11 PIT counts,
     # scaled with the SAME train stats; item state = static genre flags).
@@ -94,12 +102,11 @@ def build_features(
     user_entity = user_state.join(F.broadcast(user_dim), "userid", "left")
     user_entity = feat.zscore_apply(user_entity, stats)
     user_entity = user_entity.select(
-        "userid", *[c for c in ["gender", "age", "occupation"] if c not in pruned], *dense
+        "userid", *[c for c in user_side if c not in pruned], *dense
     )
     item_entity = item_dim.select("itemid", *[c for c in item_dim.columns if c.startswith("item_g") and c not in pruned])
 
-    # A9/M1: feature metadata — slot order + cardinalities for sparse features
-    cards = feat.max_plus_one(joined, SPARSE_ID_COLS + [c for c in ("gender", "age", "occupation") if c not in pruned])
+    # M1: feature metadata — slot order + cardinalities for sparse features
     feat_meta = {
         "sparse_id": [{"name": c, "slot": i, "n_cat": cards[c]} for i, c in enumerate(SPARSE_ID_COLS)],
         "sparse_side": [
@@ -118,8 +125,3 @@ def build_features(
         "n_features": len(all_cols),
     }
     return train_df, test_df, user_entity, item_entity, feat_meta
-
-
-def save_feat_meta(feat_meta: dict, path: str) -> None:
-    with open(path, "w") as f:
-        json.dump(feat_meta, f, indent=2)

@@ -4,6 +4,8 @@ the last-11 user-state quirk, recall-term threshold)."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -84,6 +86,54 @@ def test_queryid_is_scan_order(offline_frames):
         assert r["queryid"] == i
 
 
+def test_queryid_is_scan_order_under_a_partial_range_sample(spark):
+    """P12 at a size where RangePartitioner samples only part of each parent
+    partition (20k offline rows behind the PIT window's shuffle): the
+    queryid must still be the (userid, ts, _line_id) scan order when the
+    frame is read by a job after construction, both in imp_term and in
+    train ∪ test. (At the golden fixture's size the sample takes every row,
+    so per-job range bounds agree by accident.)"""
+    rng = np.random.default_rng(7)
+    n_users, per_user = 500, 50
+    userid = np.repeat(np.arange(1, n_users + 1), per_user)
+    ratings_pd = pd.DataFrame({
+        "userid": userid,
+        "itemid": rng.integers(1, fx.N_ITEMS + 1, userid.size),
+        "rating": rng.integers(1, 6, userid.size),
+        # duplicate timestamps: the order must come from the line tiebreak
+        "ts": 1_000_000_000 + np.tile(np.arange(per_user) // 2 * 60, n_users),
+    })
+    ratings_pd["_line_id"] = np.arange(userid.size)
+    offline, _ = preprocess.offline_online(
+        preprocess.label_and_split(spark.createDataFrame(ratings_pd))
+    )
+    movies = spark.createDataFrame(fx.gen_movies())
+
+    scan = sorted(
+        offline.select("userid", "ts", "_line_id", "itemid", "label").collect(),
+        key=lambda r: (r["userid"], r["ts"], r["_line_id"]),
+    )
+    assert len(scan) >= 20_000
+
+    imp = terms.imp_term(offline, movies)
+    got = imp.select("queryid", "userid", "ts", "_line_id").collect()
+    assert sorted(r["queryid"] for r in got) == list(range(len(scan)))
+    by_qid = {r["queryid"]: r for r in got}
+    for i, want in enumerate(scan):
+        r = by_qid[i]
+        assert (r["userid"], r["ts"], r["_line_id"]) == (want["userid"], want["ts"], want["_line_id"]), i
+
+    train, test, _ue, _ie, _meta = feature_engi.build_features(
+        offline, spark.createDataFrame(fx.gen_users()), movies
+    )
+    got = train.unionByName(test).select("queryid", "userid", "itemid", "label").collect()
+    assert sorted(r["queryid"] for r in got) == list(range(len(scan)))
+    by_qid = {r["queryid"]: r for r in got}
+    for i, want in enumerate(scan):
+        r = by_qid[i]
+        assert (r["userid"], r["itemid"], r["label"]) == (want["userid"], want["itemid"], want["label"]), i
+
+
 def test_user_state_last11_quirk(offline_frames):
     """user_term counts the final row plus the previous 10 (11 rows)."""
     offline, movies, _, user_state = offline_frames
@@ -142,3 +192,27 @@ def test_feature_build_layout(data):
     # entity tables keyed and non-empty
     assert user_entity.count() > 0 and item_entity.count() > 0
     assert "userid" in user_entity.columns and "itemid" in item_entity.columns
+
+
+def test_feature_stats_guards(spark):
+    """The one stats aggregate keeps every guard of the P6/A9/A3 helpers it
+    replaced: constant = one distinct non-NULL value or all-NULL, all-NULL
+    cardinality 0, train-only mean/stddev_samp with NaN mean -> 0.0 and
+    NaN/<=0 stddev -> 1.0."""
+    from recsys_pipeline_spark.operators import features as feat
+
+    df = spark.createDataFrame(
+        [
+            (0, 5, None, 0, 1, 7, None, 4),
+            (0, 5, None, 2, 2, None, None, 4),
+            (0, 5, None, None, 3, None, None, None),
+            (1, 5, None, 2, 100, 50, 9, 8),
+        ],
+        "istest int, a int, b int, c int, x int, y int, z int, w int",
+    )
+    constant, cards, stats = feat.feature_stats(
+        df, ["a", "b", "c"], ["a", "b", "c"], ["x", "y", "z", "w"], "istest = 0"
+    )
+    assert constant == ["a", "b"]
+    assert cards == {"a": 6, "b": 0, "c": 3}
+    assert stats == {"x": (2.0, 1.0), "y": (7.0, 1.0), "z": (0.0, 1.0), "w": (4.0, 1.0)}

@@ -25,6 +25,22 @@ def _final_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _executed_by(spark, build):
+    """-> (what ``build()`` returns, the physical plans of the SQL executions
+    it ran) — for operators that materialize part of their work eagerly."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    out = build()
+    return out, [e.physicalPlanDescription() for e in executions() if e.executionId() > last]
+
+
 def test_range_join_rides_equi_key_not_nested_loop(spark):
     plan = _final_plan(q_range_join_attribution(spark, SF))
     assert "BroadcastNestedLoopJoin" not in plan
@@ -58,10 +74,34 @@ def test_assign_queryid_no_single_partition_sort(spark):
     from recsys_pipeline_spark.operators import pit
 
     ev = read_table(spark, SF, "events").select("user_id", "ts", "event_id")
-    out = pit.assign_queryid(ev, "user_id", "ts", tiebreak_col="event_id")
-    plan = _final_plan(out)
+    out, ran = _executed_by(
+        spark, lambda: pit.assign_queryid(ev, "user_id", "ts", tiebreak_col="event_id")
+    )
+    # the range exchange runs inside the eager checkpoint that pins the
+    # stamped frame, so the plans that did the work are the ones it ran;
+    # the returned frame only scans the pinned rows
+    plan = "\n".join(ran + [_final_plan(out)])
     assert "Exchange SinglePartition" not in plan
     assert "rangepartitioning" in plan.lower()
+
+
+def test_feature_frames_read_the_pinned_pit_frame(spark):
+    """build_features computes the PIT window once: imp_term pins it with
+    its queryid, so the returned train/test frames must hold no Window and
+    no hash exchange on userid — they read the pinned rows instead of
+    re-running the window in every job that consumes them."""
+    from recsys_pipeline_spark.pipeline import feature_engi, preprocess
+    from tests import ml1m_fixture as fx
+
+    ratings = spark.createDataFrame(fx.gen_ratings())
+    offline, _ = preprocess.offline_online(preprocess.label_and_split(ratings))
+    train, test, _ue, _ie, _meta = feature_engi.build_features(
+        offline, spark.createDataFrame(fx.gen_users()), spark.createDataFrame(fx.gen_movies())
+    )
+    for df in (train, test):
+        plan = _final_plan(df)
+        assert not re.search(r"\bWindow\b", plan), plan
+        assert not re.search(r"Exchange hashpartitioning\(userid\b", plan), plan
 
 
 def test_embedding_near_dup_one_scan_one_exchange(spark):
