@@ -242,12 +242,6 @@ def read_all_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: read_table(spark, sf_dir, t) for t in schemas.TESTDATA_TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for the SQL API."""
-    for t in schemas.TESTDATA_TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """Default sink. Partition columns chosen by the caller for pruning at scale."""
     w = df.write.mode("overwrite")
@@ -273,8 +267,3 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.format("parquet").saveAsTable(table)
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    """S4 compatibility shim (reference contract wrote CSV; prefer Parquet)."""
-    df.write.mode("overwrite").option("header", "true").csv(path)

@@ -723,8 +723,8 @@ def fuzzy_decontaminate_flags(
     # single-split; the mapInPandas kernel (zero shuffle, md5 once per
     # unique shingle, vectorized affine mins, spread input) measured
     # 4.35 -> 2.99 s min / 4.52 -> 3.24 s median at sf0.1 in the
-    # alternating A/B (tools/ab_minhash_arrow.py; values bit-identical at
-    # both SFs). portable=False callers keep the expression kernel
+    # alternating A/B (OPTIMIZATION_r16.md; values bit-identical at both
+    # SFs). portable=False callers keep the expression kernel
     # (xxhash64 has no Python twin).
     if portable:
         sig = dedup.minhash_signature_arrow(

@@ -559,11 +559,6 @@ def simhash(
     )
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit SimHash words (bit_count of XOR)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 # ---------------------------------------------------------------------------
 # Embedding-cosine near-dup
 # ---------------------------------------------------------------------------

@@ -55,16 +55,6 @@ _FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Deterministic pseudo-features from the raw bytes (NOT a real decode —
-    stands in for model-embedding extraction so the distributed plumbing is
-    exercised end-to-end)."""
-    import hashlib
-
-    h = hashlib.sha256(payload or b"").digest()
-    return [int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)]
-
-
 def extract_features(
     df: DataFrame,
     decode: str = "deterministic_fake",

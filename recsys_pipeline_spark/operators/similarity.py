@@ -36,10 +36,6 @@ def unrolled_dot(a: Column, b: Column, dim: int) -> Column:
     return out
 
 
-def unrolled_sq_norm(a: Column, dim: int) -> Column:
-    return unrolled_dot(a, a, dim)
-
-
 def brute_force_topk(
     corpus: DataFrame,
     query_vec: list[float],

@@ -235,21 +235,6 @@ def q_recommend_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _type_count_profile(df: DataFrame, key: str) -> DataFrame:
-    """Closed-form embedding: per-key interaction counts over the 5 event
-    types, as an array<double> in EVENT_TYPES order. The deterministic stand-in
-    for the ALS factors (V1/V2) — same vector-table shape, but a pure function
-    of the data, so cosines are reproducible in ANSI SQL."""
-    aggs = [
-        F.sum(F.when(F.col("event_type") == t, 1).otherwise(0)).cast("double").alias(f"_c{j}")
-        for j, t in enumerate(EVENT_TYPES)
-    ]
-    g = df.groupBy(key).agg(*aggs)
-    return g.select(
-        key, F.array(*[F.col(f"_c{j}") for j in range(len(EVENT_TYPES))]).alias("vector")
-    )
-
-
 # Fixed linear-ranker coefficients (det composite). Chosen dyadic (exact in
 # binary floating point) so literal parsing can't introduce cross-engine ULPs.
 DET_RANK_WEIGHTS: list[tuple[str, float]] = [

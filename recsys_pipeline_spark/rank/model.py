@@ -7,13 +7,21 @@ MLlib analog: ``FMClassifier`` (factorized machines = the FM core; factorSize
 matches the reference's id-embedding dim) with LogisticRegression as the
 linear-only baseline. Parity is metric-level (AUC threshold), not bitwise
 (SURVEY trap #5). Scoring is ``model.transform`` — Tungsten-batched, the
-analog of the reference's chunked Triton calls (M9) without the RPC.
+analog of the reference's chunked Triton calls (M9) without the RPC. A
+binomial logistic-regression ranker also exposes its margin as literal
+weights (``linear_terms``), which the serve path splits per entity.
 """
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.ml import Pipeline, PipelineModel
-from pyspark.ml.classification import FMClassifier, LogisticRegression
+from pyspark.ml.classification import (
+    FMClassifier,
+    LogisticRegression,
+    LogisticRegressionModel,
+)
 from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import VectorAssembler
 from pyspark.sql import DataFrame
@@ -341,6 +349,38 @@ def score(
     if keep is None:
         keep = [c for c in df.columns if c not in ("features",)]
     return scored.select(*keep, prob_to_score.alias(score_col))
+
+
+_LINEAR_TERMS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def linear_terms(model) -> tuple[float, list[tuple[str, float]]] | None:
+    """The margin of a binomial logistic-regression ranker, ``assembler`` +
+    ``LogisticRegressionModel``, as (intercept, [(slot column, weight), ...])
+    in slot order: ``transform``'s positive-class probability is then
+    ``1 - 1/(1 + exp(intercept + sum(weight * slot)))``. None for any other
+    model (FM, MLP, one-hot stages, multinomial, a vector-valued slot),
+    which only ``transform`` can score. Read once per model object: the
+    weights are three py4j calls, cached here for the object's lifetime."""
+    if model in _LINEAR_TERMS:
+        return _LINEAR_TERMS[model]
+    terms = None
+    stages = getattr(model, "stages", [])
+    if (
+        len(stages) == 2
+        and isinstance(stages[0], VectorAssembler)
+        and isinstance(stages[1], LogisticRegressionModel)
+        and stages[0].getOutputCol() == stages[1].getFeaturesCol()
+        and stages[1].getFamily() != "multinomial"
+        and stages[1].numClasses == 2
+    ):
+        cols = stages[0].getInputCols()
+        weights = [float(w) for w in stages[1].coefficients.toArray()]
+        intercept = float(stages[1].intercept)
+        if len(weights) == len(cols):
+            terms = (intercept, list(zip(cols, weights)))
+    _LINEAR_TERMS[model] = terms
+    return terms
 
 
 def auc(model: PipelineModel, test_df: DataFrame) -> float:

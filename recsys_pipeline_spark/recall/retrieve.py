@@ -373,4 +373,4 @@ def fused_recall(
     return pairs.withColumn(
         "rk",
         F.expr("row_number() OVER (PARTITION BY userid ORDER BY recall_score DESC, itemid)"),
-    ).where(F.col("rk") <= k).drop("rk")
+    ).where(f"rk <= {int(k)}").drop("rk")

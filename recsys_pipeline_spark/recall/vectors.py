@@ -70,11 +70,6 @@ def item_vectors(model: ALSModel) -> DataFrame:
     return model.itemFactors.select(F.col("id").alias("itemid"), F.col("features").alias("vector"))
 
 
-def score_pairs(model: ALSModel, pairs: DataFrame) -> DataFrame:
-    """Dot-product score for (userid, itemid) pairs via model.transform."""
-    return model.transform(pairs)
-
-
 def auc(model: ALSModel, test_df: DataFrame) -> float:
     """M8: AUC of the dot-product score on held-out labeled pairs."""
     from pyspark.ml.evaluation import BinaryClassificationEvaluator

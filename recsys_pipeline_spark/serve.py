@@ -8,15 +8,24 @@ Spark-first: ONE DataFrame query, computed for every requested user at once:
 
     users     = request ⟕ user state, P13 defaults, hash-partitioned by userid
     recall    = fused_recall(users, item state as a broadcast catalog)
-    features  = recall ⋈ broadcast(item_entity) ⋈ user_entity        (J7)
-    scored    = ranker over the features, missing -> 0               (M9)
+    scored    = ranker over the candidates' entity features, missing -> 0
+                                                                 (J7, M9)
     answer    = top 50 per user by score desc                         (W6/W7)
+
+The ranker (``model_ranker``): a binomial logistic-regression model is
+served as per-entity partial margins. The candidates join one double per
+item (broadcast) and one per user, and the score is one SQL expression. Any
+other model joins every entity feature (``entity_features``) and runs
+``model.transform``. Joining ~57 feature columns and running the assembler
+and the model UDFs fused the LR ranker's stage into one 9.6 KB generated
+method, past HotSpot's 8,000-byte JIT limit, so it ran in the bytecode
+interpreter.
 
 On the complete-catalog branch the request shuffles once: the recall's
 top-200 window, the entity joins, the ranker and the top-50 window all run
 on the users' userid partitioning. The entity features join the 200 kept
 candidates, not the |users|×|items| scored pairs: carried through the
-recall's sort, their ~60 columns cost more than the rest of the request.
+recall's sort, their columns cost more than the rest of the request.
 
 Null-default semantics (P13, online/utils/redis_caller.py:19-35): a user with
 no state gets vector [1.0]*dim, empty terms, empty seen set.
@@ -30,7 +39,6 @@ from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from recsys_pipeline_spark.operators import topk
 from recsys_pipeline_spark.rank import model as rank_model
 from recsys_pipeline_spark.recall import retrieve
 from recsys_pipeline_spark.schemas import EMBEDDING_DIM, RECALL_SIZE, RESPONSE_SIZE
@@ -61,21 +69,37 @@ def user_rows(
 def rank_candidates(
     users: DataFrame,
     catalog: DataFrame,
-    user_entity: DataFrame,
-    item_entity: DataFrame,
-    score: Callable[[DataFrame], DataFrame],
+    rank: Callable[[DataFrame], DataFrame],
     recall_k: int = RECALL_SIZE,
     response_k: int = RESPONSE_SIZE,
     emb_dim: int = EMBEDDING_DIM,
     n_items: int | None = None,
 ) -> DataFrame:
-    """recall -> entity features -> zero-fill -> ``score`` -> top
-    ``response_k`` per user, over ``user_rows`` and an item-state catalog.
-    ``score`` maps the candidates to a frame with a ``score`` column;
+    """recall -> ``rank`` -> top ``response_k`` per user, over ``user_rows``
+    and an item-state catalog. ``rank`` maps the recall's candidates
+    (userid, itemid, recall_score) to a frame with a ``score`` column;
     ``n_items`` is the catalog's recorded row count, if known."""
     candidates = retrieve.fused_recall(
         users, catalog, k=recall_k, n_items=n_items, dim=emb_dim
     )
+    # W6/W7 as one SQL window: built from Column objects
+    # (topk.top_k_per_group) it costs ~120 py4j calls per request
+    return (
+        rank(candidates)
+        .selectExpr(
+            "userid", "itemid", "score",
+            "row_number() OVER (PARTITION BY userid ORDER BY score DESC, itemid) AS rk",
+        )
+        .where(f"rk <= {int(response_k)}")
+        .drop("rk")
+    )
+
+
+def entity_features(
+    candidates: DataFrame, user_entity: DataFrame, item_entity: DataFrame
+) -> DataFrame:
+    """J7: the candidates with every entity feature column joined (item
+    side broadcast), a missing row or value read as 0."""
     enriched = candidates.join(F.broadcast(item_entity), "itemid", "left").join(
         user_entity, "userid", "left"
     )
@@ -85,17 +109,66 @@ def rank_candidates(
     features = [c for c in item_entity.columns if c != "itemid"] + [
         c for c in user_entity.columns if c != "userid"
     ]
-    return topk.top_k_per_group(
-        score(enriched.na.fill(0, subset=features)).select("userid", "itemid", "score"),
-        ["userid"],
-        [F.col("score").desc(), F.col("itemid").asc()],
-        k=response_k,
-    )
+    return enriched.na.fill(0, subset=features)
 
 
-def model_score(model: PipelineModel) -> Callable[[DataFrame], DataFrame]:
-    """The synced ranker as a ``rank_candidates`` scorer (M9)."""
-    return lambda df: rank_model.score(model, df, keep=["userid", "itemid"])
+def model_ranker(
+    model, user_entity: DataFrame, item_entity: DataFrame
+) -> Callable[[DataFrame], DataFrame]:
+    """The synced ranker (M9) as a ``rank_candidates`` scorer.
+
+    A binomial logistic-regression ranker is served as partial margins:
+    each slot is a candidate column (userid, itemid), a ``user_entity``
+    column or an ``item_entity`` column, so the margin is ``b + (row
+    terms) + U + I`` with U one double per user and I one per item, each a
+    projection over its entity table. The candidates join those two
+    columns instead of every feature, and the score is one SQL expression
+    with ``transform``'s sigmoid: no assembler, no model UDF. A missing
+    entity row, a NULL and a NaN read as 0, as ``entity_features``' fill
+    does. Scores agree with ``transform`` to ~1e-16, not bit for bit: MLlib's
+    dot product sums in its BLAS's order. Any other model is scored by
+    ``transform`` over ``entity_features``."""
+    terms = rank_model.linear_terms(model)
+    if terms is None:
+        return lambda df: rank_model.score(
+            model, entity_features(df, user_entity, item_entity), keep=["userid", "itemid"]
+        )
+    intercept, weights = terms
+    sides = {
+        "row": {"userid", "itemid"},
+        "user": set(user_entity.columns) - {"userid"},
+        "item": set(item_entity.columns) - {"itemid"},
+    }
+    parts: dict[str, list[str]] = {side: [] for side in sides}
+    for c, w in weights:
+        on = [side for side, cols in sides.items() if c in cols]
+        if len(on) != 1:
+            raise ValueError(
+                f"ranker slot {c!r} is on {on or 'none'} of the candidate row, "
+                "user_entity and item_entity"
+            )
+        x = f"CAST(`{c}` AS DOUBLE)"
+        if on[0] != "row":
+            x = f"coalesce(nanvl({x}, 0D), 0D)"
+        parts[on[0]].append(f"{w!r}D * {x}")
+    margin = [f"{intercept!r}D", *parts["row"]]
+    user_part = item_part = None
+    if parts["user"]:
+        user_part = user_entity.selectExpr("userid", " + ".join(parts["user"]) + " AS _u_margin")
+        margin.append("coalesce(_u_margin, 0D)")
+    if parts["item"]:
+        item_part = item_entity.selectExpr("itemid", " + ".join(parts["item"]) + " AS _i_margin")
+        margin.append("coalesce(_i_margin, 0D)")
+    score = f"1D - 1D / (1D + exp({' + '.join(margin)})) AS score"
+
+    def rank(candidates: DataFrame) -> DataFrame:
+        if item_part is not None:
+            candidates = candidates.join(F.broadcast(item_part), "itemid", "left")
+        if user_part is not None:
+            candidates = candidates.join(user_part, "userid", "left")
+        return candidates.selectExpr("userid", "itemid", score)
+
+    return rank
 
 
 def recommend(
@@ -125,8 +198,8 @@ def recommend(
         emb_dim,
     )
     return rank_candidates(
-        users, build_item_state(item_vecs, item_terms), user_entity, item_entity,
-        model_score(model), recall_k, response_k, emb_dim,
+        users, build_item_state(item_vecs, item_terms),
+        model_ranker(model, user_entity, item_entity), recall_k, response_k, emb_dim,
     )
 
 
@@ -142,13 +215,13 @@ def recommend_linear(
     emb_dim: int = EMBEDDING_DIM,
 ) -> DataFrame:
     """The §2.10 composite with a CLOSED-FORM ranker, served from state rows
-    (``sync.build_user_state`` / ``build_item_state`` shapes): the exact
-    relational skeleton of ``recommend`` (P13 defaults -> fused recall with
-    the seen filter -> J5/J7 entity features -> missing-feature zero-fill ->
-    W6/W7 top-k), but the model score is ``recall_score + sum(w_c *
-    feature_c)`` with literal coefficients — a fixed linear scorer standing
-    in for the synced model weights (reference online/main/s1_server.py:24-57
-    + triton_caller.py).
+    (``sync.build_user_state`` / ``build_item_state`` shapes): the
+    relational skeleton of ``recommend`` with every entity feature joined
+    (P13 defaults -> fused recall with the seen filter -> J5/J7 entity
+    features -> missing-feature zero-fill -> W6/W7 top-k), but the model
+    score is ``recall_score + sum(w_c * feature_c)`` with literal
+    coefficients — a fixed linear scorer standing in for the synced model
+    weights (reference online/main/s1_server.py:24-57 + triton_caller.py).
 
     Every step is deterministic relational algebra, so the WHOLE request path
     is reproducible by an ANSI-SQL oracle (the trained-model variant,
@@ -158,7 +231,9 @@ def recommend_linear(
     """
     score = "recall_score" + "".join(f" + {float(w)!r}D * `{c}`" for c, w in weights)
     return rank_candidates(
-        user_rows(request_users, [user_state], emb_dim), item_state, user_entity, item_entity,
-        lambda df: df.selectExpr("userid", "itemid", f"{score} AS score"),
+        user_rows(request_users, [user_state], emb_dim), item_state,
+        lambda df: entity_features(df, user_entity, item_entity).selectExpr(
+            "userid", "itemid", f"{score} AS score"
+        ),
         recall_k, response_k, emb_dim,
     )

@@ -63,14 +63,3 @@ def get_spark(app_name: str = "recsys_pipeline_spark", shuffle_partitions: str |
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def tune_for_sf(spark: SparkSession, approx_input_rows: int) -> None:
-    """Adjust shuffle parallelism to the data scale.
-
-    At 100 TB the default heuristic is ~2-3 tasks per core with partitions
-    sized to fit in executor memory; AQE coalesces the small side at runtime,
-    so we only need an upper bound here.
-    """
-    target = max(8, min(2000, approx_input_rows // 1_000_000))
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))

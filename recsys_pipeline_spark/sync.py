@@ -154,15 +154,18 @@ def recommend_with_state(
 ) -> DataFrame:
     """§2.10 served from an already-loaded state dict. The state rows are
     the recall's input shapes: the request joins the user state once and
-    the item state is the catalog. ``feature_cols`` is the ranker's slot
-    layout, which the synced model already carries. ``kwargs``: recall_k,
-    response_k."""
+    the item state is the catalog. The ranker (``serve.model_ranker``) is
+    derived from ``st["rank_model"]`` and the entity tables per request, so
+    a state dict whose model was swapped serves the new one; an LR model's
+    weights are read once per model object. ``feature_cols`` is the
+    ranker's slot layout, which the synced model already carries.
+    ``kwargs``: recall_k, response_k."""
     from recsys_pipeline_spark import serve
 
     return serve.rank_candidates(
         serve.user_rows(request_users, [st["user_state"]], emb_dim),
-        st["item_state"], st["user_entity"], st["item_entity"],
-        serve.model_score(st["rank_model"]),
+        st["item_state"],
+        serve.model_ranker(st["rank_model"], st["user_entity"], st["item_entity"]),
         emb_dim=emb_dim, n_items=st.get("n_items"), **kwargs,
     )
 

@@ -560,3 +560,55 @@ def test_served_request_shuffles_once(spark, tmp_path):
     # by its read schema
     assert any("FileScan" in line and "genre_ids" in line for line in catalog_side)
     assert not any("userid" in line for line in catalog_side)
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, AQE stages and their plans included."""
+    yield node
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [node.plan()]
+    else:
+        seq = node.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    for kid in kids:
+        yield from _plan_nodes(kid)
+
+
+def test_served_request_compiles_under_the_jit_limit(spark, ml1m_state):
+    """A request served from the ml-1m fixture state: every whole-stage
+    codegen method stays under HotSpot's 8,000-byte JIT limit (above it the
+    method runs interpreted), no VectorAssembler UDF is left in the plan,
+    and each entity table reaches the candidates as a broadcast of at most
+    two columns (its key and the ranker's partial margin)."""
+    from recsys_pipeline_spark import sync
+
+    st, feature_cols = ml1m_state
+    req = spark.createDataFrame([(u,) for u in range(1, 40)] + [(10**6,)], "userid long")
+    df = sync.recommend_with_state(st, req, feature_cols, recall_k=200, response_k=50)
+    df.collect()  # the plan of this query, settled by AQE
+    plan = df._jdf.queryExecution().executedPlan()
+    stages = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+    sizes = {
+        stages.apply(i)._1().splitlines()[0]: stages.apply(i)._3().maxMethodCodeSize()
+        for i in range(stages.size())
+    }
+    assert sizes and all(0 < size < 8000 for size in sizes.values()), sizes
+    assert "VectorAssembler" not in plan.toString()
+
+    def scanned(node):
+        return {
+            n.relation().location().rootPaths().head().getName()
+            for n in _plan_nodes(node)
+            if n.nodeName().startswith("Scan parquet")
+        }
+
+    entity_broadcasts = [
+        n.output().size()
+        for n in _plan_nodes(plan)
+        if n.nodeName() == "BroadcastExchange"
+        and scanned(n) & {"user_entity", "item_entity"}
+    ]
+    assert len(entity_broadcasts) == 2 and max(entity_broadcasts) <= 2, entity_broadcasts

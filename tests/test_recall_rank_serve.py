@@ -349,6 +349,108 @@ def test_recommend_end_to_end(world, mf_model, ranker):
     assert 99999 in by_user
 
 
+def _by_transform(model, user_entity, item_entity):
+    """The reference ranker: every entity feature joined and zero-filled,
+    then ``model.transform``."""
+    return lambda df: rank_model.score(
+        model, serve.entity_features(df, user_entity, item_entity), keep=["userid", "itemid"]
+    )
+
+
+def _assert_same_ranking(got, want, k):
+    """Scores within 1e-12 on the same (userid, itemid) keys, and the same
+    per-user top-k lists (score desc, itemid asc)."""
+    got = {(r["userid"], r["itemid"]): r["score"] for r in got.collect()}
+    want = {(r["userid"], r["itemid"]): r["score"] for r in want.collect()}
+    assert got.keys() == want.keys() and got
+    assert all(abs(got[key] - want[key]) <= 1e-12 for key in want)
+
+    def top(scores):
+        lists: dict[int, list] = {}
+        for (u, i), s in sorted(scores.items(), key=lambda kv: (-kv[1], kv[0][1])):
+            lists.setdefault(u, []).append(i)
+        return {u: items[:k] for u, items in lists.items()}
+
+    assert top(got) == top(want)
+
+
+def test_linear_ranker_parts_match_transform_on_ml1m_state(spark, ml1m_state):
+    """M9/M10: the LR ranker served as per-entity partial margins scores
+    every user x item pair (unknown ones included) as ``transform`` over
+    the fully joined, zero-filled features does, and the served top-50
+    lists are the transform-ranked ones."""
+    st, feature_cols = ml1m_state
+    model, ue, ie = st["rank_model"], st["user_entity"], st["item_entity"]
+    assert rank_model.linear_terms(model) is not None
+    users = [r[0] for r in ue.select("userid").collect()] + [10**6]
+    items = [r[0] for r in ie.select("itemid").collect()] + [10**6]
+    pairs = spark.createDataFrame(
+        [(u, i) for u in users for i in items], "userid long, itemid long"
+    )
+    _assert_same_ranking(
+        serve.model_ranker(model, ue, ie)(pairs), _by_transform(model, ue, ie)(pairs), k=10
+    )
+
+    from recsys_pipeline_spark import sync
+
+    req = spark.createDataFrame([(u,) for u in users], "userid long")
+    served = sync.recommend_with_state(st, req, feature_cols, recall_k=200, response_k=50)
+    reference = serve.rank_candidates(
+        serve.user_rows(req, [st["user_state"]]), st["item_state"],
+        _by_transform(model, ue, ie), recall_k=200, response_k=50, n_items=st["n_items"],
+    )
+    _assert_same_ranking(served, reference, k=50)
+
+
+def _hand_made_entities(spark):
+    user_entity = spark.createDataFrame(
+        [(1, 2, 0.5), (2, None, -1.5), (3, 1, None), (4, 3, float("nan")), (5, 0, 2.0)],
+        "userid long, u_n int, u_x double",
+    )
+    item_entity = spark.createDataFrame(
+        [(1, 0.25, 1.0), (2, float("nan"), 2.0), (3, None, float("nan")), (4, -0.75, None)],
+        "itemid long, i_x double, i_f float",
+    )
+    return user_entity, item_entity
+
+
+def test_linear_ranker_parts_fill_missing_values_like_transform(spark):
+    """Unknown users and items score through their userid/itemid slots;
+    a missing entity row, a NULL and a NaN (double and float) read as 0,
+    as the zero-fill before ``transform`` reads them."""
+    ue, ie = _hand_made_entities(spark)
+    cols = ["userid", "itemid", "u_n", "u_x", "i_x", "i_f"]
+    train = spark.createDataFrame(
+        [
+            (u, i, u % 3, (u * 7 % 5) - 2.0, (i * 3 % 7) / 3.0, float(i % 4), (u * i + u) % 3 % 2)
+            for u in range(1, 9) for i in range(1, 9)
+        ],
+        "userid long, itemid long, u_n int, u_x double, i_x double, i_f float, label int",
+    )
+    model = rank_model.train_rank_model(train, cols, algo="lr", max_iter=20)
+    intercept, weights = rank_model.linear_terms(model)
+    assert [c for c, _ in weights] == cols and all(w != 0 for _, w in weights)
+    pairs = spark.createDataFrame(
+        [(u, i) for u in (1, 2, 3, 4, 5, 99) for i in (1, 2, 3, 4, 98)], "userid long, itemid long"
+    )
+    _assert_same_ranking(
+        serve.model_ranker(model, ue, ie)(pairs), _by_transform(model, ue, ie)(pairs), k=3
+    )
+
+
+def test_linear_ranker_rejects_a_slot_on_no_side(spark):
+    """A ranker slot that is neither a candidate column nor an entity
+    column is an error, not a dropped term."""
+    ue, ie = _hand_made_entities(spark)
+    train = spark.createDataFrame(
+        [(u, float(u % 3), float(u % 2), u % 2) for u in range(20)],
+        "userid long, u_x double, orphan double, label int",
+    )
+    model = rank_model.train_rank_model(train, ["userid", "u_x", "orphan"], algo="lr", max_iter=5)
+    with pytest.raises(ValueError, match="orphan"):
+        serve.model_ranker(model, ue, ie)
+
+
 def test_deepfm_score_det_matches_numpy_forward_pass(spark):
     """deepfm_score_det's Spark builder and its SQL oracle are generated
     from the SAME weight lists, so a bug in the shared construction logic
