@@ -1190,7 +1190,8 @@ def _bpe_apply_from_paired(
     followers. Every window shares one (word, pos) sort; the ``state``
     argument is unused but kept for the call-shape (and for alternative
     implementations that need it). Measured (alternating A/B, sf0.1,
-    tools/ab_bpe.py): bpe_train 2.72 → 2.18 s min (0.80×), bpe_encode
+    OPTIMIZATION_r16.md "BPE family — merge-apply joins → pure window
+    algebra"): bpe_train 2.72 → 2.18 s min (0.80×), bpe_encode
     4.12 → 3.43 (0.83×), training_batches 5.18 → 4.76 (0.92×); outputs
     bit-identical at 1–4 rounds on adversarial repeat-run fixtures and at
     sf0.01 for all three queries (plus the oracle suite)."""
@@ -1246,7 +1247,7 @@ def _bpe_apply_from_paired(
 # reading was position bias, and the closing bench passes agreed (bpe_train
 # 1.48x above its quiet ratchet with span 2 landed). The encoder-state
 # loops measured span 2 at +5% from the start. Per-round checkpoints stay
-# everywhere; tools/ab_bpe_span.py reproduces the experiment (a span > 1
+# everywhere; OPTIMIZATION_r17.md item 3 records the experiment (a span > 1
 # needs the pair frame re-aliased in _bpe_apply_from_paired — consecutive
 # uncheckpointed rounds slice the SAME merges frame and collide on exprIds;
 # the landed per-round form does not need it and does not pay it).

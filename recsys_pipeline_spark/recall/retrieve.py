@@ -267,15 +267,28 @@ def _norm_sql(v: str, dim: int) -> str:
     )
 
 
+def catalog_rows(catalog: DataFrame, dim: int) -> DataFrame:
+    """The recall's catalog side from item state rows (itemid, vector,
+    genre_ids): the vector as ``ivec`` (array<double>) with its L2 norm
+    ``inorm`` (``_norm_sql``: NULL for a NULL vector, a vector of another
+    dimension fails the query). Any other column rides along onto each
+    scored pair."""
+    return catalog.selectExpr(
+        "* EXCEPT (vector)", "CAST(vector AS ARRAY<DOUBLE>) AS ivec"
+    ).selectExpr("*", f"{_norm_sql('ivec', dim)} AS inorm")
+
+
 def _catalog_pairs(
     users: DataFrame, catalog: DataFrame, dim: int, vector_boost: float, term_boost: float
 ) -> DataFrame:
     """(userid, itemid, recall_score) for every kept pair, scored in the JVM
-    against the broadcast catalog: no exchange of its own, so the pairs keep
-    the users' partitioning.
+    against the broadcast ``catalog_rows`` catalog: no exchange of its own,
+    so the pairs keep the users' partitioning. Columns of ``users`` beyond
+    (userid, vector, terms, items) and of the catalog beyond its own ride
+    along.
 
-    * cosine: the unrolled left-associated dot over the two precomputed
-      norms, bit-identical to ``dedup._seq_cross_dot`` / ``_seq_norm`` (the
+    * cosine: the unrolled left-associated dot over the two norms,
+      bit-identical to ``dedup._seq_cross_dot`` / ``_seq_norm`` (the
       ``similarity.unrolled_dot`` form, one ``F.expr``); NULL on a zero norm;
     * term: the multiset match count ``term_scores`` computes (one per equal
       non-NULL element pair), 0 when the sets do not overlap;
@@ -283,11 +296,8 @@ def _catalog_pairs(
       not among the user's seen items (ES ``must_not``).
     """
     u = users.selectExpr(
-        "userid", "CAST(vector AS ARRAY<DOUBLE>) AS uvec", "terms", "items"
+        "* EXCEPT (vector)", "CAST(vector AS ARRAY<DOUBLE>) AS uvec"
     ).selectExpr("*", f"{_norm_sql('uvec', dim)} AS unorm")
-    i = catalog.selectExpr(
-        "itemid", "CAST(vector AS ARRAY<DOUBLE>) AS ivec", "genre_ids"
-    ).selectExpr("*", f"{_norm_sql('ivec', dim)} AS inorm")
     dot = "+".join(f"element_at(uvec,{d})*element_at(ivec,{d})" for d in range(1, dim + 1))
     term = (
         "CASE WHEN arrays_overlap(terms, genre_ids) THEN aggregate(terms, 0, "
@@ -303,20 +313,24 @@ def _catalog_pairs(
         " AND NOT coalesce(array_contains(items, itemid), false)"
     )
     return (
-        u.crossJoin(F.broadcast(i))
+        u.crossJoin(F.broadcast(catalog))
         .where(keep)
-        .selectExpr("userid", "itemid", f"{score} AS recall_score")
+        .selectExpr(
+            "* EXCEPT (uvec, unorm, terms, items, ivec, genre_ids, inorm)",
+            f"{score} AS recall_score",
+        )
     )
 
 
 def _ann_pairs(
     users: DataFrame, catalog: DataFrame, k: int, vector_boost: float, term_boost: float
 ) -> DataFrame:
-    """The above-threshold channels: LSH vector candidates and the term
-    equi-join, fused by a full outer join, seen items anti-joined."""
+    """The above-threshold channels over a ``catalog_rows`` catalog: LSH
+    vector candidates and the term equi-join, fused by a full outer join,
+    seen items anti-joined, then the riding columns joined back on."""
     vec = vector_scores_ann(
         users.where(F.col("vector").isNotNull()).select("userid", "vector"),
-        catalog.where(F.col("vector").isNotNull()).select("itemid", "vector"),
+        catalog.where(F.col("ivec").isNotNull()).select("itemid", F.col("ivec").alias("vector")),
         k=max(k * 4, k),
     )
     term = term_scores(users.select("userid", "terms"), catalog.select("itemid", "genre_ids"))
@@ -329,7 +343,14 @@ def _ann_pairs(
         ).alias("recall_score"),
     )
     seen_pairs = users.select("userid", F.explode("items").alias("itemid"))
-    return fused.join(seen_pairs, ["userid", "itemid"], "left_anti")
+    pairs = fused.join(seen_pairs, ["userid", "itemid"], "left_anti")
+    ride_u = [c for c in users.columns if c not in ("userid", "vector", "terms", "items")]
+    ride_i = [c for c in catalog.columns if c not in ("itemid", "ivec", "genre_ids", "inorm")]
+    if ride_u:
+        pairs = pairs.join(users.select("userid", *ride_u), "userid")
+    if ride_i:
+        pairs = pairs.join(F.broadcast(catalog.select("itemid", *ride_i)), "itemid")
+    return pairs
 
 
 def fused_recall(
@@ -347,9 +368,11 @@ def fused_recall(
     (userid, itemid, recall_score).
 
     ``users`` holds one row per user (userid, vector, terms, items) and
-    ``catalog`` one row per item (itemid, vector, genre_ids): the synced
-    state rows (``sync.build_user_state`` / ``build_item_state``). A NULL
-    field is an absent channel: no vector, no terms, nothing seen.
+    ``catalog`` one row per item, ``catalog_rows`` over the item state
+    (itemid, vector, genre_ids): the synced state rows
+    (``sync.build_user_state`` / ``build_item_state``). A NULL field is an
+    absent channel: no vector, no terms, nothing seen. Any further column
+    of either side rides along onto the kept pairs.
 
     Strategy by catalog size (``n_items``, the catalog's row count; counted
     here when the caller has not recorded it):
@@ -370,7 +393,6 @@ def fused_recall(
         pairs = _catalog_pairs(users, catalog, dim, vector_boost, term_boost)
     else:
         pairs = _ann_pairs(users, catalog, k, vector_boost, term_boost)
-    return pairs.withColumn(
-        "rk",
-        F.expr("row_number() OVER (PARTITION BY userid ORDER BY recall_score DESC, itemid)"),
+    return pairs.selectExpr(
+        "*", "row_number() OVER (PARTITION BY userid ORDER BY recall_score DESC, itemid) AS rk"
     ).where(f"rk <= {int(k)}").drop("rk")

@@ -509,9 +509,10 @@ def test_segment_quantiles_window_consumes_histogram(spark):
 def test_served_request_shuffles_once(spark, tmp_path):
     """A request served from synced state (complete catalog) is one hash
     exchange — the request rows on userid — under the recall window, the
-    entity joins, the ranker and the top-50 window: no sort-merge join, no
-    Python scoring, and one nested-loop join whose broadcast side is the
-    item catalog."""
+    ranker and the top-50 window: no sort-merge join, no Python scoring,
+    two broadcasts (the resident user table and catalog, no state or
+    entity file scanned per request) and one nested-loop join whose
+    broadcast side is the item catalog."""
     from recsys_pipeline_spark import sync
     from recsys_pipeline_spark.rank import model as rank_model
 
@@ -556,10 +557,9 @@ def test_served_request_shuffles_once(spark, tmp_path):
         if line.find("+-") <= col:
             break
         catalog_side.append(line)
-    # scan paths are abbreviated in plan strings: recognise the item state
-    # by its read schema
-    assert any("FileScan" in line and "genre_ids" in line for line in catalog_side)
-    assert not any("userid" in line for line in catalog_side)
+    assert plan.count("BroadcastExchange") == 2
+    assert "FileScan" not in plan
+    assert catalog_side and not any("userid" in line for line in catalog_side)
 
 
 def _plan_nodes(node):
@@ -581,8 +581,8 @@ def test_served_request_compiles_under_the_jit_limit(spark, ml1m_state):
     """A request served from the ml-1m fixture state: every whole-stage
     codegen method stays under HotSpot's 8,000-byte JIT limit (above it the
     method runs interpreted), no VectorAssembler UDF is left in the plan,
-    and each entity table reaches the candidates as a broadcast of at most
-    two columns (its key and the ranker's partial margin)."""
+    and the request reads only the two resident serving tables: two
+    broadcasts, no parquet scan."""
     from recsys_pipeline_spark import sync
 
     st, feature_cols = ml1m_state
@@ -597,18 +597,6 @@ def test_served_request_compiles_under_the_jit_limit(spark, ml1m_state):
     }
     assert sizes and all(0 < size < 8000 for size in sizes.values()), sizes
     assert "VectorAssembler" not in plan.toString()
-
-    def scanned(node):
-        return {
-            n.relation().location().rootPaths().head().getName()
-            for n in _plan_nodes(node)
-            if n.nodeName().startswith("Scan parquet")
-        }
-
-    entity_broadcasts = [
-        n.output().size()
-        for n in _plan_nodes(plan)
-        if n.nodeName() == "BroadcastExchange"
-        and scanned(n) & {"user_entity", "item_entity"}
-    ]
-    assert len(entity_broadcasts) == 2 and max(entity_broadcasts) <= 2, entity_broadcasts
+    names = [n.nodeName() for n in _plan_nodes(plan)]
+    assert names.count("BroadcastExchange") == 2, names
+    assert not any(name.startswith("Scan parquet") for name in names), names

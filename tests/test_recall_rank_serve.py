@@ -7,10 +7,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from recsys_pipeline_spark import serve
+from recsys_pipeline_spark import serve, sync
 from recsys_pipeline_spark.pipeline import feature_engi, preprocess, terms
 from recsys_pipeline_spark.rank import model as rank_model
 from recsys_pipeline_spark.recall import retrieve, vectors
+from recsys_pipeline_spark.schemas import EMBEDDING_DIM
 from tests import ml1m_fixture as fx
 
 
@@ -132,7 +133,9 @@ def test_fused_recall_ann_switch(world, mf_model):
     seen = terms.user_filter(offline)
     out = retrieve.fused_recall(
         sync.build_user_state(vectors.user_vectors(mf_model), ut, seen),
-        sync.build_item_state(vectors.item_vectors(mf_model), item_t),
+        retrieve.catalog_rows(
+            sync.build_item_state(vectors.item_vectors(mf_model), item_t), EMBEDDING_DIM
+        ),
         k=10, ann_item_threshold=0,
     )
     rows = out.collect()
@@ -212,8 +215,11 @@ def test_fused_recall_matches_python_reference(spark):
     users = spark.createDataFrame(
         _ADV_USERS, "userid long, vector array<double>, terms array<int>, items array<bigint>"
     )
-    catalog = spark.createDataFrame(
-        _ADV_ITEMS, "itemid long, vector array<double>, genre_ids array<int>"
+    catalog = retrieve.catalog_rows(
+        spark.createDataFrame(
+            _ADV_ITEMS, "itemid long, vector array<double>, genre_ids array<int>"
+        ),
+        3,
     )
     for k in (3, 20):
         got = sorted(
@@ -235,12 +241,40 @@ def test_fused_recall_matches_python_reference(spark):
     assert got == _reference_recall(want_users, _ADV_ITEMS, 4)
 
 
+def test_ann_recall_carries_riding_columns(spark):
+    """On the ANN branch too, a column of the users or the catalog beyond
+    the recall's own reaches each kept pair from its own row, and leaves
+    the recall unchanged."""
+    users = spark.createDataFrame(
+        _ADV_USERS, "userid long, vector array<double>, terms array<int>, items array<bigint>"
+    )
+    catalog = retrieve.catalog_rows(
+        spark.createDataFrame(
+            _ADV_ITEMS, "itemid long, vector array<double>, genre_ids array<int>"
+        ),
+        3,
+    )
+
+    def recall(u, c):
+        return retrieve.fused_recall(u, c, k=4, ann_item_threshold=0, dim=3).collect()
+
+    plain = sorted(tuple(r) for r in recall(users, catalog))
+    rows = recall(users.selectExpr("*", "userid * 10 AS u_tag"),
+                  catalog.selectExpr("*", "itemid * 100 AS i_tag"))
+    assert plain and all(r["u_tag"] == r["userid"] * 10 and r["i_tag"] == r["itemid"] * 100
+                         for r in rows)
+    assert sorted((r["userid"], r["itemid"], r["recall_score"]) for r in rows) == plain
+
+
 def test_fused_recall_rejects_a_vector_of_another_dimension(spark):
     users = spark.createDataFrame(
         _ADV_USERS, "userid long, vector array<double>, terms array<int>, items array<bigint>"
     )
-    catalog = spark.createDataFrame(
-        [(1, [1.0, 0.0], [1])], "itemid long, vector array<double>, genre_ids array<int>"
+    catalog = retrieve.catalog_rows(
+        spark.createDataFrame(
+            [(1, [1.0, 0.0], [1])], "itemid long, vector array<double>, genre_ids array<int>"
+        ),
+        3,
     )
     with pytest.raises(Exception, match="ivec has 2 dims, want 3"):
         retrieve.fused_recall(users, catalog, k=3, dim=3).collect()
@@ -374,32 +408,30 @@ def _assert_same_ranking(got, want, k):
     assert top(got) == top(want)
 
 
+def _after_recall(st, req, rank, emb_dim=EMBEDDING_DIM, **kwargs):
+    """The reference request: the state rows as stored, the recall's kept
+    candidates scored by ``rank``, top ``response_k``."""
+    return serve.rank_candidates(
+        serve.user_rows(req, [st["user_state"]], emb_dim),
+        retrieve.catalog_rows(st["item_state"], emb_dim),
+        rank, emb_dim=emb_dim, n_items=st.get("n_items"), **kwargs,
+    )
+
+
 def test_linear_ranker_parts_match_transform_on_ml1m_state(spark, ml1m_state):
-    """M9/M10: the LR ranker served as per-entity partial margins scores
-    every user x item pair (unknown ones included) as ``transform`` over
-    the fully joined, zero-filled features does, and the served top-50
-    lists are the transform-ranked ones."""
+    """M9/M10: served from the resident tables, the LR ranker's per-entity
+    partial margins score every kept user x item pair (an unknown user
+    included) as ``transform`` over the fully joined, zero-filled features
+    does, and the served top-50 lists are the transform-ranked ones."""
     st, feature_cols = ml1m_state
     model, ue, ie = st["rank_model"], st["user_entity"], st["item_entity"]
     assert rank_model.linear_terms(model) is not None
     users = [r[0] for r in ue.select("userid").collect()] + [10**6]
-    items = [r[0] for r in ie.select("itemid").collect()] + [10**6]
-    pairs = spark.createDataFrame(
-        [(u, i) for u in users for i in items], "userid long, itemid long"
-    )
-    _assert_same_ranking(
-        serve.model_ranker(model, ue, ie)(pairs), _by_transform(model, ue, ie)(pairs), k=10
-    )
-
-    from recsys_pipeline_spark import sync
-
     req = spark.createDataFrame([(u,) for u in users], "userid long")
-    served = sync.recommend_with_state(st, req, feature_cols, recall_k=200, response_k=50)
-    reference = serve.rank_candidates(
-        serve.user_rows(req, [st["user_state"]]), st["item_state"],
-        _by_transform(model, ue, ie), recall_k=200, response_k=50, n_items=st["n_items"],
-    )
-    _assert_same_ranking(served, reference, k=50)
+    every_pair = dict(recall_k=st["n_items"], response_k=st["n_items"])
+    for kw, k in ((every_pair, 10), (dict(recall_k=200, response_k=50), 50)):
+        served = sync.recommend_with_state(st, req, feature_cols, **kw)
+        _assert_same_ranking(served, _after_recall(st, req, _by_transform(model, ue, ie), **kw), k)
 
 
 def _hand_made_entities(spark):
@@ -414,41 +446,173 @@ def _hand_made_entities(spark):
     return user_entity, item_entity
 
 
-def test_linear_ranker_parts_fill_missing_values_like_transform(spark):
-    """Unknown users and items score through their userid/itemid slots;
-    a missing entity row, a NULL and a NaN (double and float) read as 0,
-    as the zero-fill before ``transform`` reads them."""
+_HAND_MADE_SLOTS = ["userid", "itemid", "u_n", "u_x", "i_x", "i_f"]
+
+
+def _hand_made_state(spark, ranker=None) -> dict:
+    """A 3-dim state around the hand-made entities: users 4 and 5 have
+    entity rows but no state, user 7 state but no entity row; items 5 and 6
+    are in the item state only. The ranker, unless given, is an LR over
+    every entity column and both ids."""
     ue, ie = _hand_made_entities(spark)
-    cols = ["userid", "itemid", "u_n", "u_x", "i_x", "i_f"]
-    train = spark.createDataFrame(
-        [
-            (u, i, u % 3, (u * 7 % 5) - 2.0, (i * 3 % 7) / 3.0, float(i % 4), (u * i + u) % 3 % 2)
-            for u in range(1, 9) for i in range(1, 9)
-        ],
-        "userid long, itemid long, u_n int, u_x double, i_x double, i_f float, label int",
-    )
-    model = rank_model.train_rank_model(train, cols, algo="lr", max_iter=20)
-    intercept, weights = rank_model.linear_terms(model)
-    assert [c for c, _ in weights] == cols and all(w != 0 for _, w in weights)
-    pairs = spark.createDataFrame(
-        [(u, i) for u in (1, 2, 3, 4, 5, 99) for i in (1, 2, 3, 4, 98)], "userid long, itemid long"
-    )
-    _assert_same_ranking(
-        serve.model_ranker(model, ue, ie)(pairs), _by_transform(model, ue, ie)(pairs), k=3
-    )
+    if ranker is None:
+        train = spark.createDataFrame(
+            [(u, i, u % 3, (u * 7 % 5) - 2.0, (i * 3 % 7) / 3.0, float(i % 4),
+              (u * i + u) % 3 % 2) for u in range(1, 9) for i in range(1, 9)],
+            "userid long, itemid long, u_n int, u_x double, i_x double, i_f float, label int",
+        )
+        ranker = rank_model.train_rank_model(train, _HAND_MADE_SLOTS, algo="lr", max_iter=20)
+    return {
+        "user_state": spark.createDataFrame(
+            [
+                (1, [1.0, 0.5, -0.5], [1], [2]),
+                (2, [0.2, 1.0, 0.0], [0, 1], None),
+                (3, None, [2], [1]),
+                (7, [0.3, 0.3, 0.9], None, None),
+            ],
+            "userid long, vector array<float>, terms array<int>, items array<bigint>",
+        ),
+        "item_state": spark.createDataFrame(
+            [(i, [float(i % 3), 1.0, -0.25 * i], [i % 3]) for i in range(1, 7)],
+            "itemid long, vector array<float>, genre_ids array<int>",
+        ),
+        "user_entity": ue,
+        "item_entity": ie,
+        "rank_model": ranker,
+    }
+
+
+def test_linear_ranker_parts_fill_missing_values_like_transform(spark):
+    """Served from the resident tables, a user with entity features but no
+    state (4, 5), one with state but no entity row (7), an unknown user, items
+    with no entity row (5, 6), and NULL and NaN (double and float) entity
+    values score as ``transform`` over the zero-filled features does: a
+    missing row or value reads as 0, the ids score through their slots."""
+    st = _hand_made_state(spark)
+    _, weights = rank_model.linear_terms(st["rank_model"])
+    assert [c for c, _ in weights] == _HAND_MADE_SLOTS and all(w != 0 for _, w in weights)
+    ids = [1, 2, 3, 4, 5, 7, 99]
+    req = spark.createDataFrame([(u,) for u in ids], "userid long")
+    kw = dict(emb_dim=3, recall_k=6, response_k=6)
+    got = sync.recommend_with_state(st, req, [], **kw)
+    assert {r["userid"] for r in got.collect()} == set(ids)
+    ranker = _by_transform(st["rank_model"], st["user_entity"], st["item_entity"])
+    _assert_same_ranking(got, _after_recall(st, req, ranker, **kw), k=3)
 
 
 def test_linear_ranker_rejects_a_slot_on_no_side(spark):
     """A ranker slot that is neither a candidate column nor an entity
     column is an error, not a dropped term."""
-    ue, ie = _hand_made_entities(spark)
     train = spark.createDataFrame(
         [(u, float(u % 3), float(u % 2), u % 2) for u in range(20)],
         "userid long, u_x double, orphan double, label int",
     )
     model = rank_model.train_rank_model(train, ["userid", "u_x", "orphan"], algo="lr", max_iter=5)
+    st = _hand_made_state(spark, ranker=model)
     with pytest.raises(ValueError, match="orphan"):
-        serve.model_ranker(model, ue, ie)
+        sync.recommend_with_state(st, st["user_state"].select("userid"), [], emb_dim=3)
+
+
+def _served(spark, st, ids, **kwargs):
+    req = spark.createDataFrame([(u,) for u in ids], "userid long")
+    return sorted(
+        tuple(r) for r in sync.recommend_with_state(st, req, [], **kwargs).collect()
+    )
+
+
+def test_duplicate_request_ids_are_answered_once(spark):
+    st = _hand_made_state(spark)
+    once = _served(spark, st, [1, 99], emb_dim=3, recall_k=4, response_k=3)
+    assert len({(u, i) for u, i, _ in once}) == len(once) == 6
+    assert _served(spark, st, [1, 1, 99, 99], emb_dim=3, recall_k=4, response_k=3) == once
+
+
+def _jobs(spark, group, run):
+    """-> (``run()``, the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resident_tables_are_built_once_per_state_and_ranker(spark, ml1m_state):
+    """The first request on a state builds the serving tables; the next one
+    runs 4 jobs (two broadcasts, the request's map stage, the final stage).
+    Swapping the ranker or the user state rebuilds them and serves the new
+    model's scores and the new rows, while a frame built before the swap
+    still serves the old ones."""
+    loaded, feature_cols = ml1m_state
+    st = {k: v for k, v in loaded.items() if k != "serving"}
+    users = sorted(r[0] for r in st["user_state"].select("userid").limit(6).collect())
+    ids = users + [10**6]
+    kw = dict(recall_k=200, response_k=50)
+    first, n_first = _jobs(spark, "first", lambda: _served(spark, st, ids, **kw))
+    second, n_second = _jobs(spark, "second", lambda: _served(spark, st, ids, **kw))
+    assert second == first and n_second == 4 and n_first > n_second
+
+    req = spark.createDataFrame([(u,) for u in ids], "userid long")
+    ue, ie = st["user_entity"], st["item_entity"]
+    before = sync.recommend_with_state(st, req, feature_cols, **kw)
+    # the new ranker learns the reverse of the old one's ranking
+    pairs = spark.createDataFrame(
+        [(u, i) for u in users for i in range(1, 200)], "userid long, itemid long"
+    )
+    scored = rank_model.score(st["rank_model"], serve.entity_features(pairs, ue, ie))
+    median = scored.approxQuantile("score", [0.5], 0.0)[0]
+    train = scored.selectExpr("*", f"CAST(score < {median!r} AS INT) AS label")
+    st["rank_model"] = rank_model.train_rank_model(train, feature_cols, algo="lr", max_iter=20)
+    swapped = sync.recommend_with_state(st, req, feature_cols, **kw)
+
+    def by_transform():
+        return _after_recall(st, req, _by_transform(st["rank_model"], ue, ie), **kw)
+
+    _assert_same_ranking(swapped, by_transform(), 50)
+    assert sorted(map(tuple, swapped.collect())) != first
+    assert sorted(map(tuple, before.collect())) == first
+
+    st["user_state"] = st["user_state"].where(f"userid != {users[0]}")
+    refreshed = sync.recommend_with_state(st, req, feature_cols, **kw)
+    _assert_same_ranking(refreshed, by_transform(), 50)
+    assert [r for r in sorted(map(tuple, refreshed.collect())) if r[0] == users[0]] != [
+        r for r in sorted(map(tuple, swapped.collect())) if r[0] == users[0]
+    ]
+
+
+def test_resident_tables_are_rebuilt_after_a_lost_block(spark):
+    """A pinned block that is gone (as with a lost executor) makes the next
+    request rebuild the tables instead of failing on the missing block."""
+    st = _hand_made_state(spark)
+    kw = dict(emb_dim=3, recall_k=4, response_k=3)
+    want = _served(spark, st, [1, 2, 99], **kw)
+    memo = st["serving"]
+    spark.sparkContext._jsc.sc().env().blockManager().removeBlock(memo.blocks[0], True)
+    assert _served(spark, st, [1, 2, 99], **kw) == want
+    assert st["serving"] is not memo
+
+
+def test_resident_user_table_above_the_broadcast_threshold_is_not_broadcast(spark):
+    """A user table stored in more bytes than
+    ``spark.sql.autoBroadcastJoinThreshold`` is joined as the planner
+    chooses: one broadcast (the catalog) and the same rows."""
+    st = _hand_made_state(spark)
+    kw = dict(emb_dim=3, recall_k=4, response_k=3)
+    ids = [1, 2, 4, 99]
+    want = _served(spark, st, ids, **kw)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    try:
+        st = {k: v for k, v in st.items() if k != "serving"}
+        req = spark.createDataFrame([(u,) for u in ids], "userid long")
+        df = sync.recommend_with_state(st, req, [], **kw)
+        assert sorted(map(tuple, df.collect())) == want
+        plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    finally:
+        spark.conf.set(key, saved)
+    assert plan.count("BroadcastExchange") == 1 and "BroadcastNestedLoopJoin" in plan
 
 
 def test_deepfm_score_det_matches_numpy_forward_pass(spark):

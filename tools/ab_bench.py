@@ -10,8 +10,10 @@ meaningful even when the absolute numbers are inflated.
 Usage:
     python tools/ab_bench.py <variants_module> [reps] [sf_dir]
 
-``variants_module`` is a python module path (e.g. ``tools.ab_fuzzy``)
-exposing ``VARIANTS: dict[str, Callable[[SparkSession, str], DataFrame]]``.
+``variants_module`` is a python module path exposing
+``VARIANTS: dict[str, Callable[[SparkSession, str], DataFrame]]`` (the
+fuzzy_decontaminate kernel variants recorded in OPTIMIZATION_r16.md,
+"Arrow/numpy portable signature kernel", were timed this way).
 Each callable is constructed fresh per rep and materialized through the noop
 sink (guide §1.4). One warmup rep per variant at sf0.001 fills the codegen
 cache before anything is timed.
